@@ -12,6 +12,7 @@ import statistics
 from typing import Any
 
 import spans as sp
+import stats
 
 
 def gather(wl: Any, cycles: list, traced_flags: list[bool]) -> dict:
@@ -40,12 +41,6 @@ def gather(wl: Any, cycles: list, traced_flags: list[bool]) -> dict:
         "journal_bytes": os.path.getsize(journal) if journal and os.path.exists(journal) else 0,
         "journal_records": len(getattr(wl, "results", [])),
     }
-
-
-def _rate(ops: list) -> float | None:
-    items = sum(op.items for op in ops if op.kind == "commit")
-    wall = sum(op.wall for op in ops)
-    return items / wall if wall else None
 
 
 def read_event_log(log_dir: str) -> dict:
@@ -120,9 +115,10 @@ def per_layer(inputs: dict, log_dir: str, untraced_items_per_s: float | None) ->
         exists += (s["attrs"].get("counts") or {}).get("exists", 0)
     cands = sum(s["attrs"].get("candidates", 0) for s in named("textdedup.incremental_candidates"))
     verified = sum(s["attrs"].get("verified", 0) for s in named("textdedup.connected_components"))
-    traced_rate = _rate(ops)
+    traced_rate = stats.summarize(ops)["items_per_s"]
     roots = named("bench.commit")
-    root_self_ms = 1000.0 * sum(selfs[s["id"]] for s in roots)
+    root_ids = {s["id"] for s in roots}
+    entries = [s for s in named("runner.replay", "textdedup.dedup_incremental") if s["parent"] in root_ids]
 
     def per(x: float, n: float) -> float:
         return x / n if n else 0.0
@@ -162,9 +158,10 @@ def per_layer(inputs: dict, log_dir: str, untraced_items_per_s: float | None) ->
         "spark.spill_bytes": (per(sum_metric({s["id"] for s in spans}, "spill_bytes"), units), "B"),
         "trace.overhead_ratio": (
             1.0 - traced_rate / untraced_items_per_s if traced_rate and untraced_items_per_s else 0.0, "1"),
-        # share of commit wall no engine span covers: near 0 means the
-        # layer self times account for the epoch (batch) wall
-        "trace.commit_unattributed_share": (per(root_self_ms, dur_ms(roots)), "1"),
+        # share of commit wall in the entry call's own code, outside every
+        # traced layer below it: for replay the runner's own time, for
+        # dedup_incremental its shingling and MinHash jobs
+        "trace.entry_self_share": (per(1000.0 * sum(selfs[s["id"]] for s in entries), dur_ms(roots)), "1"),
     }
     metrics = {k: {"value": v, "unit": u} for k, (v, u) in m.items()}
     return metrics, {k: {kk: round(vv, 3) for kk, vv in row.items()} for k, row in sorted(table.items())}

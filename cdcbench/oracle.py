@@ -34,6 +34,28 @@ def apply_events(state: dict, events: pd.DataFrame) -> dict:
     return state
 
 
+def expected_actions(state: dict, events: pd.DataFrame) -> dict[str, int]:
+    """Change-feed action counts of applying ``events`` to ``state`` (read
+    before the epoch): per key, the last event against the old payload —
+    absent key: insert; same sha256: exists; other sha256: update; delete
+    of a present key: delete; delete of an absent key: nothing logged."""
+    last = events.sort_values("event_seq", kind="stable").drop_duplicates(
+        subset=["repo", "path"], keep="last"
+    )
+    counts: dict[str, int] = {}
+    for r in last.itertuples(index=False):
+        old = state.get((r.repo, r.path))
+        if r.op == "delete":
+            action = None if old is None else "delete"
+        elif old is None:
+            action = "insert"
+        else:
+            action = "exists" if old == row_digest((r.commit, r.lang, r.content)) else "update"
+        if action:
+            counts[action] = counts.get(action, 0) + 1
+    return counts
+
+
 def lww_state(seed: pd.DataFrame, events: pd.DataFrame) -> dict[tuple[str, str], str]:
     """The snapshot ``seed`` plus ``events``, replayed last-writer-wins."""
     return apply_events(seed_state(seed), events)

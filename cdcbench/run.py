@@ -132,25 +132,9 @@ def window_cycles(wl, spark, seconds: float, trace: bool) -> tuple[list, list[bo
     return cycles, traced_flags
 
 
-def summarize(ops: list) -> dict:
-    import stats
-
-    out = {}
-    for kind in ("commit", "feed", "lookup"):
-        walls = [op.wall * 1000.0 for op in ops if op.kind == kind]
-        out[f"{kind}_p50_ms"] = stats.median(walls)
-        t = stats.tail(walls)
-        out[f"{kind}_tail_ms"] = t["value"]
-        out[f"{kind}_tail"] = t
-    items = sum(op.items for op in ops if op.kind == "commit")
-    wall = sum(op.wall for op in ops)
-    out["window_s"] = wall
-    out["items_per_s"] = items / wall if wall else None
-    return out
-
-
 def run(args: argparse.Namespace, work: str) -> int:
     import gen
+    import stats
     from spans import Tracer
     from workloads import WORKLOADS, dir_bytes, live_file_bytes
 
@@ -209,7 +193,7 @@ def run(args: argparse.Namespace, work: str) -> int:
         stop_spark(spark)
 
     timed_ops = [op for c, t in zip(cycles, traced_flags) if not t for op in c]
-    s = summarize(timed_ops)
+    s = stats.summarize(timed_ops)
     # the timed operations plus the final oracle check
     attempted = len(ops) + 1
     failed = sum(not op.ok for op in ops) + bool(check_errors)
@@ -233,9 +217,7 @@ def run(args: argparse.Namespace, work: str) -> int:
         "gen_s": gen_s, "jvm_s": jvm_s, "setup_reps_s": setup_walls, "warmup_s": warmup_s,
         "cycles": len(cycles), "unit": wl.unit, "window_s": s["window_s"],
         "units": sum(op.kind == "commit" for op in timed_ops),
-        "commit_tail": s["commit_tail"], "feed_tail": s["feed_tail"], "lookup_tail": s["lookup_tail"],
-        "commit_tail_ms": s["commit_tail_ms"], "feed_tail_ms": s["feed_tail_ms"],
-        "lookup_tail_ms": s["lookup_tail_ms"],
+        **{f"{k}_tail_ms": s[f"{k}_tail_ms"] for k in ("commit", "feed", "lookup")},
         "op_ms": {k: [round(op.wall * 1000.0) for op in timed_ops if op.kind == k]
                   for k in ("commit", "feed", "lookup")},
         "failed_ops_ratio": failed / attempted,

@@ -43,3 +43,18 @@ def spread(values: list[float]) -> dict:
     median — the steadiness figure the benchmark's bounds are set against."""
     q1, q2, q3 = statistics.quantiles(values, n=4)
     return {"median": q2, "q1": q1, "q3": q3, "iqr_share": (q3 - q1) / q2 if q2 else None}
+
+
+def summarize(ops: list) -> dict:
+    """Per-kind medians and tails of the operations' walls, and items per
+    second over their summed wall. A tail is the ``tail`` dict, in ms."""
+    out = {}
+    for kind in ("commit", "feed", "lookup"):
+        walls = [op.wall * 1000.0 for op in ops if op.kind == kind]
+        out[f"{kind}_p50_ms"] = median(walls)
+        out[f"{kind}_tail_ms"] = tail(walls)
+    items = sum(op.items for op in ops if op.kind == "commit")
+    wall = sum(op.wall for op in ops)
+    out["window_s"] = wall
+    out["items_per_s"] = items / wall if wall else None
+    return out

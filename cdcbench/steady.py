@@ -1,8 +1,9 @@
 #!/usr/bin/env python3
-"""Steadiness check: run one workload once per seed and print, for each
-metric, the median, the quartiles and the quartile distance as a share of
-the median — the figure each end-to-end bound in BENCHMARK.json is set
-against (it should stay below a third of the bound).
+"""Steadiness check: run one workload untraced once per seed, for
+BENCHMARK.json's ``run_seconds``, and print, for each metric, the median,
+the quartiles and the quartile distance as a share of the median — the
+figure each end-to-end bound in BENCHMARK.json is set against (it should
+stay below a third of the bound).
 
     python3 cdcbench/steady.py --workload tail_mor --seeds 101-110 --out runs.json
 """
@@ -33,16 +34,16 @@ def main() -> int:
     p = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     p.add_argument("--workload", required=True)
     p.add_argument("--seeds", required=True, help="e.g. 101-110 or 1,2,3")
-    p.add_argument("--seconds", default="12")
-    p.add_argument("--trace", default="0")
     p.add_argument("--out", help="write every run's result and context here")
     args = p.parse_args()
+    with open(os.path.join(os.path.dirname(HERE), "BENCHMARK.json"), encoding="utf-8") as f:
+        seconds = str(json.load(f)["run_seconds"])
     runs, values = [], {}
     for seed in seed_list(args.seeds):
         t0 = time.perf_counter()
         proc = subprocess.run(
             [sys.executable, os.path.join(HERE, "run.py"), "--workload", args.workload,
-             "--seed", str(seed), "--seconds", args.seconds, "--trace", args.trace],
+             "--seed", str(seed), "--seconds", seconds, "--trace", "0"],
             cwd=os.path.dirname(HERE), capture_output=True, text=True, timeout=600,
         )
         lines = proc.stdout.strip().splitlines()

@@ -44,6 +44,18 @@ def test_tail_of_no_samples():
     assert stats.tail([]) == {"value": None, "percentile": None, "beyond": None, "samples": 0}
 
 
+def test_summarize_reports_each_tail_once_with_its_sample_count():
+    from types import SimpleNamespace as Op
+
+    ops = [Op(kind="commit", wall=w, items=100) for w in (1.0, 2.0, 3.0)]
+    ops += [Op(kind="feed", wall=0.5, items=0)]
+    s = stats.summarize(ops)
+    assert s["commit_p50_ms"] == 2000.0 and s["lookup_p50_ms"] is None
+    assert s["commit_tail_ms"] == {"value": None, "percentile": None, "beyond": None, "samples": 3}
+    assert not any(k.endswith("_tail") for k in s)
+    assert s["items_per_s"] == pytest.approx(300 / 6.5)
+
+
 def test_spread_is_quartile_distance_over_median():
     s = stats.spread([1.0, 2.0, 3.0, 4.0, 5.0, 6.0, 7.0, 8.0, 9.0, 10.0])
     assert s["median"] == 5.5
@@ -205,6 +217,28 @@ def test_lww_oracle_last_writer_wins_and_deletes():
     st = oracle.lww_state(seed, ev)
     assert st == {("r", "a"): oracle.row_digest(("c3", "py", "A3")),
                   ("r", "c"): oracle.row_digest(("c4", "rs", "C4"))}
+
+
+def test_expected_actions_classify_against_the_state_before_the_epoch():
+    state = {("r", "a"): oracle.row_digest(("c0", "py", "A0")),
+             ("r", "b"): oracle.row_digest(("c0", "py", "B0")),
+             ("r", "d"): oracle.row_digest(("c0", "py", "D0"))}
+    ev = pd.DataFrame({
+        "event_seq": [1, 2, 3, 4, 5, 6, 7],
+        "op": ["update", "update", "insert", "delete", "insert", "delete", "update"],
+        "repo": ["r"] * 7, "path": ["a", "a", "b", "c", "e", "e", "d"],
+        "commit": ["c1", "c0", "c0", None, "c5", None, "c7"],
+        "lang": ["py", "py", "py", None, "rs", None, "py"],
+        "content": ["A1", "A0", "B0", None, "E5", None, "D7"],
+    })
+    # a: last event restores the old payload -> exists; b: same payload ->
+    # exists; c: delete of an absent key -> nothing; e: insert then delete
+    # of a new key -> nothing; d: new payload -> update
+    assert oracle.expected_actions(state, ev) == {"exists": 2, "update": 1}
+    ev2 = pd.DataFrame({"event_seq": [8, 9], "op": ["insert", "delete"], "repo": ["r", "r"],
+                        "path": ["z", "b"], "commit": ["c8", None], "lang": ["py", None],
+                        "content": ["Z8", None]})
+    assert oracle.expected_actions(state, ev2) == {"insert": 1, "delete": 1}
 
 
 def test_incremental_dedup_oracle_anchors_on_corpus():

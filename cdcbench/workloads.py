@@ -91,6 +91,7 @@ class TailMor:
         self.seed_dir = os.path.join(work, "seed")
         self.next_epoch = 1  # epoch 0 is the seed commit
         self.results: list[Any] = []
+        self.expected: dict[int, dict[str, int]] = {}  # epoch -> oracle action counts
         self.rng = random.Random(seed)
 
     # -- inputs
@@ -140,8 +141,7 @@ class TailMor:
             delta_dir=self.delta_dir, checkpoint=self.checkpoint, epochs=[ep]), items=n)
         if op.ok:
             r = res[0]
-            op.extra = {"epoch": ep, "counts": r.counts,
-                        "survivors": sum(o["rows"] for o in r.offsets.values())}
+            op.extra = {"survivors": sum(o["rows"] for o in r.offsets.values())}
             self.results.append(r)
         return op
 
@@ -163,7 +163,9 @@ class TailMor:
         return op
 
     def _advance_oracle(self, ep: int) -> None:
-        oracle.apply_events(self.state, pd.read_parquet(os.path.join(self.ev_dir, f"epoch={ep}")))
+        events = pd.read_parquet(os.path.join(self.ev_dir, f"epoch={ep}"))
+        self.expected[ep] = oracle.expected_actions(self.state, events)
+        oracle.apply_events(self.state, events)
 
     def _epoch(self, spark: Any) -> list[Op]:
         """Commit the next epoch; then each consumer reads its change feed
@@ -234,6 +236,8 @@ class TailMor:
             mine = {a: c for (e, a), c in feed.items() if e == r.epoch_id}
             if mine != {a: c for a, c in r.counts.items() if c}:
                 errors.append(f"epoch {r.epoch_id}: feed actions {mine} != MergeResult {r.counts}")
+            if mine != self.expected.get(r.epoch_id):
+                errors.append(f"epoch {r.epoch_id}: feed actions {mine} != oracle {self.expected.get(r.epoch_id)}")
         errors += fsck_errors(self.table, delta_dir=self.delta_dir)
         return errors
 
@@ -254,6 +258,10 @@ class CorpusDedup:
     N_BUCKETS = 8
     MAX_BATCHES = 5  # warm-up batch + at most four timed batches
     LOOKUP_KEYS = 50
+    # a run times one batch (about 11 s of fixed per-job cost whatever
+    # its size); three consumers give three read-back and three probe
+    # samples per batch, and keep the cycle well over --seconds 12
+    CONSUMERS = 3
 
     def __init__(self, work: str, seed: int, tracer: Tracer):
         self.work, self.seed, self.tracer = work, seed, tracer
@@ -297,9 +305,10 @@ class CorpusDedup:
     def start(self) -> None:
         self.texts = dict(self.corpus)
 
-    def cycle(self, spark: Any) -> list[Op] | None:
-        """One batch: deduplicate and commit it, read its survivors back,
-        point-read a key batch. None when the landed batches are used up."""
+    def cycle(self, spark: Any, consumers: int = CONSUMERS) -> list[Op] | None:
+        """One batch: deduplicate and commit it; then each consumer reads
+        its survivors back and point-reads its own key batch. None when
+        the landed batches are used up."""
         from etlbox_spark.operators import textdedup
 
         b = self.next_batch
@@ -315,10 +324,16 @@ class CorpusDedup:
         self.survivors[b] = set(ids)
         texts = dict(self.batches[b])
         self.texts.update((i, texts[i]) for i in ids)
-        probe = self.rng.sample(range(self.CORPUS_DOCS), self.LOOKUP_KEYS)
-        return [op, self._read_back(spark, "feed", ids), self._read_back(spark, "lookup", probe)]
+        ops = [op]
+        for _ in range(consumers):
+            probe = self.rng.sample(range(self.CORPUS_DOCS), self.LOOKUP_KEYS)
+            ops += [self._read_back(spark, "feed", ids), self._read_back(spark, "lookup", probe)]
+        return ops
 
-    warmup = cycle
+    def warmup(self, spark: Any) -> list[Op]:
+        """One batch with one consumer: the reads need no more warming,
+        and each run's set-up stays short."""
+        return self.cycle(spark, consumers=1)
 
     def _read_back(self, spark: Any, kind: str, ids: list[int]) -> Op:
         keys = [(i,) for i in ids]
