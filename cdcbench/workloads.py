@@ -81,6 +81,15 @@ class TailMor:
     COMPACT_EVERY = 3  # epochs per compaction cycle
     MAX_CYCLES = 4  # timed cycles the landed binlog allows
     LOOKUP_KEYS = 50
+    # keys of each probe that the epoch just committed changed. A probe
+    # skips every delta file whose Bloom filter holds none of its keys;
+    # with uniform keys alone up to a third of the probes of a regular
+    # epoch skipped them all and ran the plain read, 30-40% faster than
+    # the merge-on-read path, so a run's median sat on either mode. With
+    # these, every probe of a regular epoch merges and every probe after
+    # a compaction reads plain: four merging probes of six per cycle put
+    # the median inside the merge mode
+    RECENT_KEYS = 5
     # two consumers per epoch: six feed reads and six probes per cycle,
     # enough for steady medians where three were not
     CONSUMERS = 2
@@ -152,7 +161,9 @@ class TailMor:
         return op
 
     def _lookup(self, spark: Any) -> Op:
-        keys = self.rng.sample(self.keyspace, self.LOOKUP_KEYS)
+        recent = self.rng.sample(self.changed, self.RECENT_KEYS)
+        others = [k for k in self.rng.sample(self.keyspace, self.LOOKUP_KEYS) if k not in recent]
+        keys = recent + others[:self.LOOKUP_KEYS - self.RECENT_KEYS]
         op, rows = timed(self.tracer, "lookup", lambda: self.table.lookup_keys(spark, keys).collect())
         if op.ok:
             got = {(r["repo"], r["path"]): oracle.row_digest((r["commit"], r["lang"], r["content"]))
@@ -164,6 +175,7 @@ class TailMor:
 
     def _advance_oracle(self, ep: int) -> None:
         events = pd.read_parquet(os.path.join(self.ev_dir, f"epoch={ep}"))
+        self.changed = sorted(set(zip(events["repo"], events["path"])))
         self.expected[ep] = oracle.expected_actions(self.state, events)
         oracle.apply_events(self.state, events)
 
@@ -259,9 +271,11 @@ class CorpusDedup:
     MAX_BATCHES = 5  # warm-up batch + at most four timed batches
     LOOKUP_KEYS = 50
     # a run times one batch (about 11 s of fixed per-job cost whatever
-    # its size); three consumers give three read-back and three probe
-    # samples per batch, and keep the cycle well over --seconds 12
-    CONSUMERS = 3
+    # its size). Five consumers after it give five read-back and five
+    # probe samples: a median that a few seconds of host CPU steal does
+    # not move. Reads are timed only after a commit: right after the
+    # cold warm-up batch they run up to 60% slower for about ten seconds.
+    CONSUMERS = 5
 
     def __init__(self, work: str, seed: int, tracer: Tracer):
         self.work, self.seed, self.tracer = work, seed, tracer
