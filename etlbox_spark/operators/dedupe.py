@@ -23,14 +23,21 @@ def payload_tie_break(df: DataFrame, payload_cols: Sequence[str]) -> Column:
     appending the full payload struct to the ordering would double the
     combiner state on a 10^10-row shuffle; the hash costs 8 bytes.
     Residue: rows identical in every hashable column but differing in a
-    MapType column (xxhash64 rejects maps) can still tie — flat CDC
-    payloads have no maps."""
-    hashable = [
-        F.col(c)
-        for c in payload_cols
-        if not isinstance(df.schema[c].dataType, T.MapType)
-    ]
+    column whose type contains a map anywhere (xxhash64 rejects maps,
+    also inside a struct or an array) can still tie — flat CDC payloads
+    have no maps."""
+    hashable = [F.col(c) for c in payload_cols if not _contains_map(df.schema[c].dataType)]
     return F.xxhash64(*hashable) if hashable else F.lit(0)
+
+
+def _contains_map(dt: T.DataType) -> bool:
+    if isinstance(dt, T.MapType):
+        return True
+    if isinstance(dt, T.StructType):
+        return any(_contains_map(f.dataType) for f in dt.fields)
+    if isinstance(dt, T.ArrayType):
+        return _contains_map(dt.elementType)
+    return False
 
 
 def dedupe_lww(df: DataFrame, key_cols: Sequence[str], order_cols: Sequence[str]) -> DataFrame:

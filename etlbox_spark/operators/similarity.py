@@ -600,8 +600,14 @@ def _check_vec_dim(df: DataFrame, vec_col: str, dim: int, who: str) -> None:
     vectors makes zip_with pad with nulls, every dot product null, and
     every row land in bucket 0 — the banded join then silently degrades
     to an all-pairs cross join (the module's own scale invariant). Fail
-    loudly instead."""
-    row = df.select(F.size(F.col(vec_col)).alias("n")).limit(1).collect()
+    loudly instead. NULL vectors carry no dimension (``size`` is NULL
+    under ANSI mode), so the probe reads the first non-NULL one."""
+    row = (
+        df.where(F.col(vec_col).isNotNull())
+        .select(F.size(F.col(vec_col)).alias("n"))
+        .limit(1)
+        .collect()
+    )
     if row and row[0]["n"] < dim:
         raise ValueError(
             f"{who}: vectors have {row[0]['n']} components but dim={dim} "

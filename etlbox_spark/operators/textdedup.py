@@ -256,7 +256,8 @@ def connected_components(
         .distinct()
     )
     # the edge set is re-joined every round — checkpoint it once so the
-    # (possibly expensive) upstream LSH plan runs a single time
+    # (possibly expensive) upstream LSH plan runs a single time; with AQE
+    # on, the call runs the plan's shuffle stages (CLAUDE.md)
     sym = sym.localCheckpoint(eager=False)
     labels = sym.select(F.col("src").alias("id")).distinct().withColumn("component", F.col("id"))
     converged = False
@@ -269,10 +270,13 @@ def connected_components(
             .groupBy("src")
             .agg(F.min("nl").alias("nl"))
         )
+        # the pre-round label rides along as __old, so the convergence
+        # count below reads this round's checkpointed frame alone
         new_labels = labels.join(
             neigh.select(F.col("src").alias("id"), "nl"), on="id", how="left"
         ).select(
             "id",
+            F.col("component").alias("__old"),
             F.least(F.col("component"), F.coalesce(F.col("nl"), F.col("component"))).alias(
                 "component"
             ),
@@ -289,6 +293,7 @@ def connected_components(
         )
         new_labels = new_labels.join(jump_side, on="component", how="left").select(
             "id",
+            "__old",
             F.least(
                 F.col("component"), F.coalesce(F.col("__cc"), F.col("component"))
             ).alias("component"),
@@ -296,16 +301,12 @@ def connected_components(
         # cap lineage (ADVICE r02): without this, each round's convergence
         # count() re-executes the whole accumulated join chain — O(rounds²)
         # recomputation on deep graphs. localCheckpoint truncates the plan
-        # at the label table (tiny: one row per vertex), and the count()
-        # below materializes it eagerly for the next round.
+        # at the label table (tiny: one row per vertex); with AQE on, the
+        # call itself runs the round's shuffle stages (CLAUDE.md), and the
+        # count() reads the checkpointed rows.
         new_labels = new_labels.localCheckpoint(eager=False)
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), on="id")
-            .where(F.col("n.component") != F.col("o.component"))
-            .count()
-        )
-        labels = new_labels
+        changed = new_labels.where(F.col("component") != F.col("__old")).count()
+        labels = new_labels.select("id", "component")
         if changed == 0:
             converged = True
             if stats is not None:
@@ -489,6 +490,13 @@ def incremental_candidates(
     testable on its own.
     """
     b_rows = lsh_band_rows(batch, id_col, text_col, n_perm, bands, ngram, seed)
+    return _probe_band_rows(spark, index, b_rows)
+
+
+def _probe_band_rows(spark, index, b_rows: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """``incremental_candidates`` over already-computed batch band rows:
+    ``dedup_incremental`` computes them once and reuses the same frame
+    for the index commit."""
     idx = index.read(spark, with_bucket=False)
     cand_bc = (
         idx.join(
@@ -573,16 +581,18 @@ def dedup_incremental(
             "per batch (the survivor set and the committed corpus would "
             "diverge)"
         )
-    cand_bc, cand_bb = incremental_candidates(
-        spark, index, batch, id_col, text_col, n_perm, bands, ngram, seed
+    # one MinHash pass per batch: the band rows feed the broadcast probe,
+    # both sides of the batch self-join and the index commit's events
+    b_rows = lsh_band_rows(batch, id_col, text_col, n_perm, bands, ngram, seed).localCheckpoint(
+        eager=False
     )
-    # the candidate frames are consumed by several downstream actions
-    # (cids collect, the verify joins, isEmpty) — truncate their lineage
-    # once so the broadcast probe over the index runs a single time, not
-    # per action (same reasoning as connected_components' edge
-    # checkpoint)
+    cand_bc, cand_bb = _probe_band_rows(spark, index, b_rows)
+    # cand_bc feeds the cids collect and the verify join — truncate its
+    # lineage so the broadcast probe over the index runs a single time,
+    # not per action. cand_bb feeds only the verify join, which runs once
+    # inside the all_edges checkpoint below. With AQE on, a checkpoint
+    # call runs its plan's shuffle stages right there (CLAUDE.md).
     cand_bc = cand_bc.localCheckpoint(eager=False)
-    cand_bb = cand_bb.localCheckpoint(eager=False)
 
     def with_text(df: DataFrame, idc: str, out: str, src: DataFrame) -> DataFrame:
         side = src.select(F.col(id_col).alias(idc), F.col(text_col).alias(out))
@@ -639,6 +649,8 @@ def dedup_incremental(
         all_edges = edges_bb.unionByName(edges_bc)
     else:
         all_edges = edges_bb
+    # isEmpty and connected_components share one run of the verify joins
+    all_edges = all_edges.localCheckpoint(eager=False)
 
     if all_edges.isEmpty():
         survivors = batch
@@ -666,8 +678,13 @@ def dedup_incremental(
         idx_spec = MergeSpec(
             key_cols=("id", "band"), seq_col="__seq", compare_cols=("bhash",), op_col="__op"
         )
+        # ids are unique per batch (checked above), so the semi-join keeps
+        # exactly lsh_band_rows(survivors) without re-shingling them; the
+        # checkpoint runs the join once, not in each of apply_epoch's
+        # actions
         iev = (
-            lsh_band_rows(survivors, id_col, text_col, n_perm, bands, ngram, seed)
+            b_rows.join(survivors.select(F.col(id_col).alias("id")), on="id", how="left_semi")
+            .localCheckpoint(eager=False)
             .withColumn("__seq", F.lit(commit_epoch).cast("long"))
             .withColumn("__op", F.lit("upsert"))
         )

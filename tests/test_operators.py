@@ -310,6 +310,22 @@ def test_dedupe_lww_tie_is_deterministic(spark):
     assert a[0]["v"] == b[0]["v"]
 
 
+def test_dedupe_lww_payload_with_nested_map(spark):
+    from etlbox_spark.operators.dedupe import dedupe_lww
+
+    # xxhash64 rejects a map at any depth: a struct or array holding one
+    # must stay out of the tie-break hash, or the plan fails at analysis
+    rows = [("k", 5, f"payload_{i}", ({"a": i},), [{"b": i}]) for i in range(16)]
+    sch = "k string, seq long, v string, s struct<m: map<string,int>>, a array<map<string,int>>"
+    a = dedupe_lww(spark.createDataFrame(rows, sch).repartition(4), ["k"], ["seq"]).collect()
+    b = dedupe_lww(
+        spark.createDataFrame(list(reversed(rows)), sch).repartition(3), ["k"], ["seq"]
+    ).collect()
+    assert len(a) == len(b) == 1
+    assert a[0]["v"] == b[0]["v"]
+    assert a[0]["s"]["m"] == {"a": int(a[0]["v"].split("_")[1])}
+
+
 def test_engine_dedupe_lww_tie_is_deterministic(spark):
     from etlbox_spark.engine.merge import dedupe_lww as engine_lww
     from etlbox_spark.engine.spec import MergeSpec

@@ -164,7 +164,12 @@ def _py_incr_oracle(
 
 
 def test_dedup_incremental_matches_python_oracle(spark, tmp_path):
-    from etlbox_spark.operators.textdedup import dedup_incremental, lsh_index_build
+    from etlbox_spark.operators.textdedup import (
+        FP_BAND,
+        dedup_incremental,
+        lsh_band_rows,
+        lsh_index_build,
+    )
 
     corpus_df = spark.createDataFrame(DOCS, "doc_id long, text string")
     t, _ = corpus_dedup_pipeline(corpus_df, str(tmp_path / "docs"), n_perm=64, bands=16)
@@ -184,6 +189,17 @@ def test_dedup_incremental_matches_python_oracle(spark, tmp_path):
     idx_ids = {r["id"] for r in idx.read(spark).select("id").collect()}
     assert idx_ids == base_ids | got
     assert 2 in t.manifest().committed_epochs and 2 in idx.manifest().committed_epochs
+    # the survivors' index rows are exactly their band rows (every band
+    # plus the FP_BAND row) — no non-survivor's bands, none dropped
+    idx_rows = sorted(
+        tuple(r)
+        for r in idx.read(spark)
+        .where(F.col("id").isin(sorted(got)))
+        .select("id", "band", "bhash")
+        .collect()
+    )
+    assert idx_rows == sorted(tuple(r) for r in lsh_band_rows(surv).collect())
+    assert {b for _, b, _ in idx_rows} >= {FP_BAND}
 
     # crash-retry convergence: replaying the SAME epoch against the
     # already-updated corpus changes nothing (epoch markers make the

@@ -201,6 +201,14 @@ def test_vec_dim_guards_fail_fast(spark):
     # element_at past the end throws mid-shuffle under ANSI otherwise
     with pytest.raises(ValueError, match="components"):
         component_sign_pairs(short, "v", bands=16, bits_per_band=2)
+    # a NULL vector has no dimension: the probe reads past it instead of
+    # comparing NULL with the requested dim
+    with_null = spark.createDataFrame(
+        [(0, None), (1, [0.5, 0.5])], "vec_id long, v array<double>"
+    ).coalesce(1)
+    with pytest.raises(ValueError, match="components"):
+        cosine_near_dup_pairs(with_null, "v", dim=64)
+    cosine_near_dup_pairs(with_null, "v", dim=2)
 
 
 def test_null_text_normalizes_to_empty(spark):
