@@ -15,8 +15,8 @@ the complete audit trail, O(1) per epoch), while the state file keeps
 only (a) the fast-resume index as inclusive ``[lo, hi]`` runs of applied
 epochs (O(#gaps) — epochs are near-contiguous by construction) and (b) a
 sliding window of the most recent ``KEEP_RECENT`` epochs' full lineage
-(what operators actually inspect after a run). Legacy full-dict state
-files are migrated into the journal on the first ``record()``.
+(what operators actually inspect after a run). A state file without
+``done_runs`` is not one this module wrote; ``load()`` rejects it.
 
 Crash-safety: the journal line lands before the state replace. A crash
 between the two re-applies the epoch on resume (the lake's marker makes
@@ -24,9 +24,7 @@ it a no-op) and re-records it — a duplicate journal line, which
 ``lineage()`` tolerates (last record per epoch wins). A crash MID-append
 can tear the final line; the next ``record()`` isolates it behind a
 leading newline and ``lineage()`` skips it (that epoch's retry
-re-recorded it). Legacy migration is atomic (temp + rename), so a crash
-mid-migration re-migrates rather than mistaking a truncated trail for
-the complete one. The state file itself is always replaced atomically.
+re-recorded it). The state file itself is always replaced atomically.
 """
 
 from __future__ import annotations
@@ -69,14 +67,6 @@ def _merge_into_runs(runs: list, ep: int) -> list:
     return merged
 
 
-def _runs_from_epochs(epochs: dict) -> list:
-    runs: list = []
-    for k in sorted(epochs, key=int):
-        if not epochs[k].get("skipped"):
-            runs = _merge_into_runs(runs, int(k))
-    return runs
-
-
 class Checkpoint:
     KEEP_RECENT = 64
 
@@ -89,8 +79,10 @@ class Checkpoint:
             return {"last_epoch": None, "epochs": {}, "done_runs": []}
         with open(self.path, encoding="utf-8") as f:
             state = json.load(f)
-        if "done_runs" not in state:  # legacy full-dict format
-            state["done_runs"] = _runs_from_epochs(state["epochs"])
+        if "done_runs" not in state:
+            raise ValueError(
+                f"checkpoint state {self.path} has no done_runs (not a checkpoint file?)"
+            )
         return state
 
     def last_epoch(self) -> int | None:
@@ -124,18 +116,6 @@ class Checkpoint:
         # journal first (append-only, O(1) per epoch — the complete audit
         # trail)
         os.makedirs(os.path.dirname(self.path) or ".", exist_ok=True)
-        if state["epochs"] and not os.path.exists(self.journal_path):
-            # one-shot legacy migration, ATOMIC (write-temp + replace):
-            # a crash mid-migration leaves no journal at all, so the
-            # retry re-migrates instead of treating a truncated trail as
-            # the complete one and letting the trim below drop lineage
-            tmpj = f"{self.journal_path}.tmp.{uuid.uuid4().hex[:8]}"
-            with open(tmpj, "w", encoding="utf-8") as f:
-                for k in sorted(state["epochs"], key=int):
-                    f.write(json.dumps({"epoch": int(k), **state["epochs"][k]}) + "\n")
-                f.flush()
-                os.fsync(f.fileno())
-            os.replace(tmpj, self.journal_path)
         # torn-append healing: a crash mid-append can leave a partial
         # final line with no newline — lead with one so the damaged line
         # stays isolated (lineage() skips it) instead of swallowing this
@@ -170,25 +150,22 @@ class Checkpoint:
         os.replace(tmp, self.path)
 
     def lineage(self) -> Iterator[dict[str, Any]]:
-        """The full per-epoch audit trail, oldest first (journal-backed;
-        falls back to the inline window for never-journaled states). A
-        crash-retried epoch can appear twice — the LAST record per epoch
-        is the one whose state replace landed, so consumers that want
-        one-per-epoch should fold with last-wins. A line torn by a crash
+        """The full per-epoch audit trail, oldest first (the journal;
+        empty before the first ``record()``). A crash-retried epoch can
+        appear twice — the LAST record per epoch is the one whose state
+        replace landed, so consumers that want one-per-epoch should fold
+        with last-wins. A line torn by a crash
         mid-append is skipped (its epoch was re-recorded on resume — the
         healing newline in ``record()`` keeps the damage isolated)."""
-        if os.path.exists(self.journal_path):
-            with open(self.journal_path, encoding="utf-8") as f:
-                for line in f:
-                    line = line.strip()
-                    if not line:
-                        continue
-                    try:
-                        rec = json.loads(line)
-                    except ValueError:
-                        continue  # torn append from a crash
-                    yield rec
+        if not os.path.exists(self.journal_path):
             return
-        state = self.load()
-        for k in sorted(state["epochs"], key=int):
-            yield {"epoch": int(k), **state["epochs"][k]}
+        with open(self.journal_path, encoding="utf-8") as f:
+            for line in f:
+                line = line.strip()
+                if not line:
+                    continue
+                try:
+                    rec = json.loads(line)
+                except ValueError:
+                    continue  # torn append from a crash
+                yield rec

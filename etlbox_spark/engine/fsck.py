@@ -41,9 +41,9 @@ half of the exactly-once story (engine/merge.py's rename protocol):
   retained history contains no ``rollback`` that could have unmarked it
   (after a rollback the stale dir is legal until re-replay rewrites it,
   so it degrades to a warning);
-* interior gaps in the visible epoch range, unhealed ``_inflight``
-  attempt dirs (incl. quarantine's), and legacy ``=``-named temp dirs
-  are warnings — all healable or legal states;
+* interior gaps in the visible epoch range and unhealed ``_inflight``
+  attempt dirs (incl. quarantine's) are warnings — all healable or
+  legal states;
 * a ``_maint/version=V`` change set must correspond to a lake commit
   (``V ≤ latest``) and, when V's record is retained, to a commit that
   actually declared a change emission (``change_token``) — a visible
@@ -208,11 +208,11 @@ def _deep_check_file(abspath: str, tag: str, e: dict) -> tuple[int, int, list]:
                 kmax = st.max if kmax is None else max(kmax, st.max)
     except Exception as ex:  # corrupt footer
         return 0, 0, [("footer-unreadable", f"{tag}: {type(ex).__name__}: {ex}")]
-    # e.get, not e[...]: a tampered entry without "rows" already reported
-    # entry-bad-rows, but the deep pass still runs — a KeyError here would
-    # break fsck's never-raises contract (distributed mode ships e.get too)
-    if num_rows != e.get("rows"):
-        errors.append(("rows-mismatch", f"{tag}: footer={num_rows} manifest={e.get('rows')}"))
+    # a tampered entry without "rows" (shipped as null in distributed
+    # mode) already reported entry-bad-rows and has nothing to compare
+    # against: skip it rather than report the same fault twice
+    if e.get("rows") is not None and num_rows != e["rows"]:
+        errors.append(("rows-mismatch", f"{tag}: footer={num_rows} manifest={e['rows']}"))
     if kmin is not None and (e.get("khash_min"), e.get("khash_max")) != (kmin, kmax):
         errors.append(
             (
@@ -371,8 +371,6 @@ def _check_delta_log(
                         continue
                     if age > _STALE_MARKER_S:
                         _warn(report, "stale-log-attempt", f"{kind}: {fn} (crashed writer?)")
-            elif fn.startswith("_inflight-epoch="):
-                _warn(report, "legacy-log-attempt", f"{kind}: {fn} (pre-rename-era name)")
         return eps
 
     eps = _sweep(delta_dir, "delta-log")

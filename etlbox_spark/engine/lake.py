@@ -63,7 +63,9 @@ each retained run before dropping older records (metadata compaction),
 and a bounded in-process cache keyed by the record file's identity
 (inode + mtime) makes the common case — re-reading the snapshot you
 just committed — free. Wholesale operations (create, rollback,
-rebucket) write full records; everything else is a delta.
+rebucket, recluster) write full records; everything else is a delta,
+whose successor state writers derive exactly as readers replay it
+(``_delta_successor``).
 
 Data files keep ``bucket`` as a *regular* column (single-valued per file,
 so parquet row-group stats make bucket filters free) while the write is
@@ -82,7 +84,7 @@ import os
 import threading
 import uuid
 import zlib
-from dataclasses import dataclass, field, fields as dataclass_fields
+from dataclasses import dataclass, field, fields as dataclass_fields, replace as dataclass_replace
 from functools import lru_cache
 from typing import Any
 
@@ -403,11 +405,11 @@ def _manifest_from_dict(d: dict[str, Any]) -> Manifest:
 
 
 def _apply_delta_record(parent: Manifest, rec: dict[str, Any]) -> Manifest:
-    """Materialize one commit on top of its parent state. The inverse of
-    the record the committers attach in ``_delta`` — every action kind
-    the engine publishes as a delta is replayed here; anything wholesale
-    (create/rollback/rebucket/revert) is a full record and never reaches
-    this function."""
+    """Materialize one commit on top of its parent state — the ONLY
+    successor rule for delta commits: readers replay records through it
+    and writers derive their new state through it (``_delta_successor``).
+    Anything wholesale (create/rollback/rebucket/recluster/revert) is a
+    full record and never reaches this function."""
     if int(rec["parent"]) != parent.version:
         raise RuntimeError(
             f"manifest chain corrupt: record v{rec['version']} claims parent "
@@ -448,6 +450,30 @@ def _apply_delta_record(parent: Manifest, rec: dict[str, Any]) -> Manifest:
         ),
         operation=rec["operation"],
     )
+
+
+def _delta_successor(m: Manifest, operation: str, **fields: Any) -> Manifest:
+    """The successor of ``m`` under one delta commit: build the commit's
+    record (every key present, unused ones at their defaults), derive the
+    new state exactly as a cold reader replays it (``_apply_delta_record``)
+    and attach the record for ``_publish`` to write. The writer's primed
+    cache entry and every later reader's reconstruction therefore come
+    from the same record by the same rule."""
+    rec = {
+        "record": "delta",
+        "version": m.version + 1,
+        "parent": m.version,
+        "operation": operation,
+        "add": [],
+        "remove_buckets": None,
+        "epoch": None,
+        "schema_add": None,
+        "properties": None,
+        **fields,
+    }
+    nm = _apply_delta_record(m, rec)
+    nm._delta = rec
+    return nm
 
 
 class LakeTable:
@@ -609,13 +635,15 @@ class LakeTable:
         rebase or recompute. The ``_latest`` pointer is advanced
         best-effort afterwards (readers treat it as a floor).
 
-        What hits disk is the commit's DELTA RECORD when the committer
-        attached one (``m._delta`` — O(commit) bytes), else the full
-        state (create/rollback/rebucket). The in-memory ``m`` is primed
-        into the snapshot cache either way, so the winner's next
-        ``manifest()`` is a dict hit; every ``meta.checkpoint.interval``
-        delta commits a full ``v{N}.ckpt.json`` sidecar is written
-        (derived data — best-effort, a crash just lengthens one chain)."""
+        What hits disk is the commit's DELTA RECORD when ``m`` came from
+        ``_delta_successor`` (``m._delta`` — O(commit) bytes), else the
+        full state (create/rollback/``_rewrite_table``). The in-memory
+        ``m`` is primed into the snapshot cache either way (for a delta
+        commit it is already the reader's replay of that record), so the
+        winner's next ``manifest()`` is a dict hit; every
+        ``meta.checkpoint.interval`` delta commits a full
+        ``v{N}.ckpt.json`` sidecar is written (derived data —
+        best-effort, a crash just lengthens one chain)."""
         os.makedirs(self._meta_dir, exist_ok=True)
         delta = getattr(m, "_delta", None)
         if delta is not None:
@@ -1010,22 +1038,20 @@ class LakeTable:
 
     # --------------------------------------------------------------- write
     def _write_data(
-        self,
-        df: DataFrame,
-        commit_dir_name: str,
-        key_cols: list[str],
-        properties: dict[str, Any] | None = None,
-        with_bloom: bool = False,
+        self, df: DataFrame, commit_dir_name: str, m: Manifest, kind: str = "base"
     ) -> list[dict[str, Any]]:
         """Write rows (must carry BUCKET_COL) under data/<commit_dir>/,
-        one directory per bucket; return manifest file entries with
-        per-file row counts and min/max key-hash stats (from the parquet
-        footers the rows-count pass already opens — free).
+        one directory per bucket, with ``m``'s key columns and write
+        properties; return manifest file entries with per-file row
+        counts and min/max key-hash stats (from the parquet footers the
+        rows-count pass already opens — free). ``kind="delta"`` marks
+        the entries as MoR delta files.
 
-        ``with_bloom`` additionally records a per-file Bloom filter over
-        the key hashes (read back from the just-written file — intended
-        for SMALL files, i.e. MoR deltas, where the column read is
-        trivial and min/max ranges prune nothing; see _bloom_build).
+        Table property ``write.bloom`` decides which files also record a
+        per-file Bloom filter over the key hashes (read back from the
+        just-written file): delta files unless it is ``"none"`` — SMALL
+        files, where the column read is trivial and min/max ranges prune
+        nothing (see _bloom_build) — and base files only under ``"all"``.
 
         Table property ``write.sort.cols`` orders rows WITHIN each bucket
         file (a per-partition sort — no extra shuffle): buckets are
@@ -1040,7 +1066,9 @@ class LakeTable:
         sets the row-group size in bytes — the pruning granularity."""
         from ..functions.hashing import key_hash
 
-        props = properties or {}
+        key_cols, props = m.key_cols, m.properties
+        bloom_mode = str(props.get("write.bloom", "delta"))
+        with_bloom = bloom_mode != "none" if kind == "delta" else bloom_mode == "all"
         spec = str(props.get("write.sort.cols", "")).strip()
         if spec == "none":
             sort_cols: list[str] = []
@@ -1110,6 +1138,8 @@ class LakeTable:
                     "khash_min": kmin,
                     "khash_max": kmax,
                 }
+                if kind == "delta":
+                    entry["kind"] = "delta"
                 # size gate first: rows is already in hand from the
                 # footer, so an oversized file never pays the column read
                 if with_bloom and rows * _BLOOM_BITS_PER_KEY <= _BLOOM_MAX_BITS:
@@ -1208,46 +1238,21 @@ class LakeTable:
         memory (and in periodic checkpoints)."""
         while True:
             cur_sv = m.current_schema_version
-            schemas = m.schemas
             schema_add = None
             if new_schema is not None and new_schema.jsonValue() != m.schema().jsonValue():
                 cur_sv += 1
                 schema_add = {str(cur_sv): new_schema.jsonValue()}
-                schemas = {**m.schemas, **schema_add}
             for e in new_entries:
                 e["schema_version"] = cur_sv
-            if replace_buckets is None:
-                files = m.files + new_entries
-            else:
-                files = [
-                    e for e in m.files if e["bucket"] not in replace_buckets
-                ] + new_entries
-            nm = Manifest(
-                version=m.version + 1,
-                key_cols=m.key_cols,
-                n_buckets=m.n_buckets,
+            nm = _delta_successor(
+                m,
+                operation,
+                add=new_entries,
+                remove_buckets=None if replace_buckets is None else sorted(replace_buckets),
+                epoch=epoch_id,
+                schema_add=schema_add,
                 current_schema_version=cur_sv,
-                schemas=schemas,
-                files=files,
-                committed_epochs=sorted([*m.committed_epochs, epoch_id]),
-                parent=m.version,
-                properties=m.properties,
-                operation=operation,
             )
-            nm._delta = {
-                "record": "delta",
-                "version": nm.version,
-                "parent": m.version,
-                "operation": operation,
-                "add": new_entries,
-                "remove_buckets": (
-                    sorted(replace_buckets) if replace_buckets is not None else None
-                ),
-                "epoch": epoch_id,
-                "schema_add": schema_add,
-                "current_schema_version": cur_sv,
-                "properties": None,
-            }
             if self._publish(nm):
                 return nm.version
             m2 = self._rebase_epoch(m.version, epoch_id)
@@ -1294,11 +1299,7 @@ class LakeTable:
                 # colliding in one directory; a losing attempt's
                 # directory is an orphan for vacuum
                 new_entries = self._write_data(
-                    df,
-                    f"c{m.version + 1}-e{epoch_id}-{uuid.uuid4().hex[:6]}",
-                    m.key_cols,
-                    properties=m.properties,
-                    with_bloom=str(m.properties.get("write.bloom", "delta")) == "all",
+                    df, f"c{m.version + 1}-e{epoch_id}-{uuid.uuid4().hex[:6]}", m
                 )
                 for e in new_entries:
                     if e["bucket"] not in changed:
@@ -1366,14 +1367,9 @@ class LakeTable:
                 # version + 1 > this stamp).
                 stamped = df.withColumn(MOR_ORDER_COL, F.lit(m.version + 1).cast("long"))
                 new_entries = self._write_data(
-                    stamped,
-                    f"d{m.version + 1}-e{epoch_id}-{uuid.uuid4().hex[:6]}",
-                    m.key_cols,
-                    properties=m.properties,
-                    with_bloom=str(m.properties.get("write.bloom", "delta")) != "none",
+                    stamped, f"d{m.version + 1}-e{epoch_id}-{uuid.uuid4().hex[:6]}", m, "delta"
                 )
                 for e in new_entries:
-                    e["kind"] = "delta"
                     if e["bucket"] not in changed:
                         raise RuntimeError(
                             f"delta commit wrote bucket {e['bucket']} outside changed set"
@@ -1602,7 +1598,6 @@ class LakeTable:
                     m,
                     hit,
                     survivors,
-                    f"delete-v{m.version + 1}-{uuid.uuid4().hex[:6]}",
                     "delete",
                     extra_record={"change_token": token} if emit_changes else None,
                 )
@@ -1626,7 +1621,6 @@ class LakeTable:
         m: Manifest,
         buckets: list[int],
         df: DataFrame,
-        commit_dir: str,
         operation: str,
         extra_record: "dict[str, Any] | None" = None,
     ) -> "tuple[int, list[dict[str, Any]]] | None":
@@ -1634,17 +1628,10 @@ class LakeTable:
         ``delete_where``: write ``df`` (the buckets' full replacement
         content), stamp entries, replace those buckets' file lists in a
         new manifest, publish. Returns (version, entries), or None when
-        the CAS is lost (caller recomputes from the new snapshot).
-        Honors ``write.bloom='all'`` like every other base-write path —
-        the first drift between the two hand-copied versions was exactly
-        a missing ``with_bloom`` here."""
+        the CAS is lost (caller recomputes from the new snapshot)."""
         with self._inflight_guard():
             entries = self._write_data(
-                df,
-                commit_dir,
-                m.key_cols,
-                properties=m.properties,
-                with_bloom=str(m.properties.get("write.bloom", "delta")) == "all",
+                df, f"{operation}-v{m.version + 1}-{uuid.uuid4().hex[:6]}", m
             )
             bset = set(buckets)
             for e in entries:
@@ -1653,31 +1640,9 @@ class LakeTable:
                     raise RuntimeError(
                         f"{operation} rewrote bucket {e['bucket']} outside target set"
                     )
-            keep = [e for e in m.files if e["bucket"] not in bset]
-            nm = Manifest(
-                version=m.version + 1,
-                key_cols=m.key_cols,
-                n_buckets=m.n_buckets,
-                current_schema_version=m.current_schema_version,
-                schemas=m.schemas,
-                files=keep + entries,
-                committed_epochs=m.committed_epochs,
-                parent=m.version,
-                properties=m.properties,
-                operation=operation,
+            nm = _delta_successor(
+                m, operation, add=entries, remove_buckets=sorted(bset), **(extra_record or {})
             )
-            nm._delta = {
-                "record": "delta",
-                "version": nm.version,
-                "parent": m.version,
-                "operation": operation,
-                "add": entries,
-                "remove_buckets": sorted(bset),
-                "epoch": None,
-                "schema_add": None,
-                "properties": None,
-                **(extra_record or {}),
-            }
             if self._publish(nm):
                 return nm.version, entries
         return None
@@ -1689,30 +1654,7 @@ class LakeTable:
             m = self.manifest()
             if epoch_id in m.committed_epochs:
                 return m.version
-            nm = Manifest(
-                version=m.version + 1,
-                key_cols=m.key_cols,
-                n_buckets=m.n_buckets,
-                current_schema_version=m.current_schema_version,
-                schemas=m.schemas,
-                files=[],
-                committed_epochs=sorted([*m.committed_epochs, epoch_id]),
-                parent=m.version,
-                properties=m.properties,
-                operation="truncate",
-            )
-            nm._delta = {
-                "record": "delta",
-                "version": nm.version,
-                "parent": m.version,
-                "operation": "truncate",
-                "truncate": True,
-                "add": [],
-                "remove_buckets": None,
-                "epoch": epoch_id,
-                "schema_add": None,
-                "properties": None,
-            }
+            nm = _delta_successor(m, "truncate", truncate=True, epoch=epoch_id)
             if self._publish(nm):
                 return nm.version
 
@@ -1747,29 +1689,7 @@ class LakeTable:
             _validate_properties(new_props, list(m.schema().names))
             if new_props == m.properties:
                 return m.version  # no-op: don't burn a version
-            nm = Manifest(
-                version=m.version + 1,
-                key_cols=m.key_cols,
-                n_buckets=m.n_buckets,
-                current_schema_version=m.current_schema_version,
-                schemas=m.schemas,
-                files=m.files,
-                committed_epochs=m.committed_epochs,
-                parent=m.version,
-                properties=new_props,
-                operation="set_properties",
-            )
-            nm._delta = {
-                "record": "delta",
-                "version": nm.version,
-                "parent": m.version,
-                "operation": "set_properties",
-                "add": [],
-                "remove_buckets": None,
-                "epoch": None,
-                "schema_add": None,
-                "properties": new_props,
-            }
+            nm = _delta_successor(m, "set_properties", properties=new_props)
             if self._publish(nm):
                 return nm.version
 
@@ -2041,16 +1961,11 @@ class LakeTable:
                     tmp = self._emit_maintenance_changes(
                         diff, delta_dir, m.version + 1, token
                     )
-                nm = Manifest(
+                nm = dataclass_replace(
+                    tgt,
                     version=m.version + 1,
-                    key_cols=tgt.key_cols,
-                    n_buckets=tgt.n_buckets,
-                    current_schema_version=tgt.current_schema_version,
-                    schemas=dict(tgt.schemas),
-                    files=list(tgt.files),
-                    committed_epochs=list(tgt.committed_epochs),
                     parent=m.version,
-                    properties=dict(m.properties),
+                    properties=m.properties,
                     operation="rollback",
                 )
                 if emit_changes:
@@ -2104,16 +2019,11 @@ class LakeTable:
                     f"manually (e.g. rollback({pre.version}) after auditing "
                     "the newer commits)"
                 )
-            nm = Manifest(
+            nm = dataclass_replace(
+                pre,
                 version=cur.version + 1,
-                key_cols=pre.key_cols,
-                n_buckets=pre.n_buckets,
-                current_schema_version=pre.current_schema_version,
-                schemas=dict(pre.schemas),
-                files=list(pre.files),
-                committed_epochs=list(pre.committed_epochs),
                 parent=cur.version,
-                properties=dict(cur.properties),
+                properties=cur.properties,
                 operation="rollback",
             )
             if self._publish(nm):
@@ -2147,35 +2057,44 @@ class LakeTable:
             df = self.read(spark, with_bucket=False, version=m.version).withColumn(
                 BUCKET_COL, bucket_expr(new_n_buckets, *m.key_cols)
             )
-            new_ver = m.version + 1
-            entries = self._write_data(
-                df,
-                f"rebucket-v{new_ver}-{uuid.uuid4().hex[:6]}",
-                m.key_cols,
-                properties=m.properties,
-                with_bloom=str(m.properties.get("write.bloom", "delta")) == "all",
-            )
-            for e in entries:
-                e["schema_version"] = m.current_schema_version
-            nm = Manifest(
-                version=new_ver,
-                key_cols=m.key_cols,
-                n_buckets=new_n_buckets,
-                current_schema_version=m.current_schema_version,
-                schemas=dict(m.schemas),
-                files=entries,
-                committed_epochs=list(m.committed_epochs),
-                parent=m.version,
-                properties=m.properties,
-                operation="rebucket",
-            )
-            if self._publish(nm):
-                return new_ver
-        # single attempt by design: each retry would be another
-        # full-table rewrite, and against a live ingest stream it would
-        # lose again — pause the writer instead
+            return self._rewrite_table(m, df, "rebucket", new_n_buckets)
+
+    def _rewrite_table(
+        self,
+        m: Manifest,
+        df: DataFrame,
+        operation: str,
+        n_buckets: int,
+        properties: "dict[str, Any] | None" = None,
+    ) -> int:
+        """The full-rewrite commit core of ``rebucket`` and
+        ``similarity.ivf_lake_recluster``: write ``df`` (every row of the
+        table, carrying BUCKET_COL under the new ``n_buckets`` layout) as
+        the whole file list of a full record on top of ``m``, with
+        ``properties`` (default: ``m``'s) — epoch markers and schema
+        history preserved. Callers hold ``_inflight_guard`` across the
+        read that produced ``df``. Returns the new version.
+
+        Single CAS attempt by design: each retry would be another
+        full-table rewrite, and against a live ingest stream it would
+        lose again — a lost CAS raises ``ConcurrentCommitError`` (pause
+        the writer and re-run)."""
+        entries = self._write_data(df, f"{operation}-v{m.version + 1}-{uuid.uuid4().hex[:6]}", m)
+        for e in entries:
+            e["schema_version"] = m.current_schema_version
+        nm = dataclass_replace(
+            m,
+            version=m.version + 1,
+            n_buckets=n_buckets,
+            files=entries,
+            parent=m.version,
+            properties=m.properties if properties is None else properties,
+            operation=operation,
+        )
+        if self._publish(nm):
+            return nm.version
         raise ConcurrentCommitError(
-            "rebucket lost the publish CAS to a concurrent commit; pause the "
+            f"{operation} lost the publish CAS to a concurrent commit; pause the "
             "ingest writer and re-run (a full-table rewrite cannot win "
             "against a live stream)"
         )
@@ -2207,13 +2126,7 @@ class LakeTable:
                 # pin the snapshot the fold was computed from — re-resolving
                 # _latest inside read() would race a concurrent epoch commit
                 df = self.read(spark, buckets=dirty, version=m.version)
-                res = self._rewrite_buckets(
-                    m,
-                    dirty,
-                    df,
-                    f"compact-v{m.version + 1}-{uuid.uuid4().hex[:6]}",
-                    "compact",
-                )
+                res = self._rewrite_buckets(m, dirty, df, "compact")
             if res is not None:
                 _, entries = res
                 return {

@@ -96,18 +96,9 @@ def _finalize_delta(delta_dir: str, epoch_id: int) -> None:
     name BEFORE commit, so a crash in between left a visible epoch=N dir
     for an epoch that never committed)."""
     tmp, final = _delta_paths(delta_dir, epoch_id)
-    # heal a stale pre-rename-era attempt dir: the legacy name contains
-    # "=" and would be parsed as a conflicting partition column by any
-    # recursive listing (read_changes/stream_changes); nothing ever
-    # finalizes the legacy name anymore, so once THIS epoch is being
-    # finalized the legacy leftover is pure garbage
-    legacy = os.path.join(delta_dir, f"_inflight-epoch={epoch_id}")
     # concurrent healers (any actor retrying a committed epoch lands
     # here) can race on the same rename — the loser's vanished source
     # means the winner already established the postcondition
-    with contextlib.suppress(OSError):
-        if os.path.exists(legacy):
-            shutil.rmtree(legacy)
     with contextlib.suppress(OSError):
         if os.path.exists(final):
             return
@@ -412,11 +403,7 @@ def expire_changes(
     lifecycle is keyed by lake commit version, not epoch; in-flight
     maintenance dirs age out like quarantine's.
 
-    Returns ``{"removed": n, "kept": m}``. Legacy-named in-flight dirs
-    (``_inflight-epoch=N`` — the pre-rename era whose ``=`` breaks
-    recursive listings) are also removed regardless of epoch: no current
-    code path will ever finalize that name, so they are unreachable
-    garbage that would otherwise poison ``stream_changes`` forever.
+    Returns ``{"removed": n, "kept": m}``.
     """
     removed = kept = 0
 
@@ -440,9 +427,6 @@ def expire_changes(
             return None
 
     for name in sorted(os.listdir(delta_dir)):
-        if name.startswith("_inflight-epoch="):
-            removed += _rm(os.path.join(delta_dir, name))
-            continue
         if not name.startswith("epoch="):
             continue
         ep = _suffix_int(name)

@@ -328,10 +328,10 @@ def ivf_lake_recluster(
     any append deltas), reassigns every row under the new centroid set
     (which may change size — ``k`` defaults to the current cluster
     count), and commits the re-laid-out store + re-pinned
-    ``ivf.centroids`` in ONE atomic full-record publish, exactly
-    ``rebucket``'s shape: epoch markers preserved (append exactly-once
-    unaffected), logical content untouched, crash leaves the old
-    snapshot live.
+    ``ivf.centroids`` in ONE atomic full-record publish through
+    ``rebucket``'s full-rewrite primitive (``LakeTable._rewrite_table``):
+    epoch markers preserved (append exactly-once unaffected), logical
+    content untouched, crash leaves the old snapshot live.
 
     Concurrency follows rebucket's rule: a single CAS attempt — a
     concurrent append landing mid-rewrite means the reassignment is
@@ -344,9 +344,6 @@ def ivf_lake_recluster(
     Returns {"version", "n_clusters", "centroids"}.
     """
     import json as _json
-    import uuid as _uuid
-
-    from ..engine.lake import ConcurrentCommitError, Manifest
 
     m = table.manifest()
     if "ivf.centroids" not in m.properties:
@@ -372,40 +369,9 @@ def ivf_lake_recluster(
             )
         cents = kmeans_centroids(df, vec_col, n_clusters, iters=iters, id_col=id_col)
         assigned = ivf_assign(df, vec_col, cents, id_col=id_col, cluster_col="bucket")
-        entries = table._write_data(
-            assigned,
-            f"recluster-v{m.version + 1}-{_uuid.uuid4().hex[:6]}",
-            m.key_cols,
-            properties=m.properties,
-            with_bloom=str(m.properties.get("write.bloom", "delta")) == "all",
-        )
-        for e in entries:
-            e["schema_version"] = m.current_schema_version
-        props = dict(m.properties)
-        props["ivf.centroids"] = _json.dumps(cents)
-        nm = Manifest(
-            version=m.version + 1,
-            key_cols=m.key_cols,
-            n_buckets=n_clusters,
-            current_schema_version=m.current_schema_version,
-            schemas=dict(m.schemas),
-            files=entries,
-            committed_epochs=list(m.committed_epochs),
-            parent=m.version,
-            properties=props,
-            operation="recluster",
-        )
-        if table._publish(nm):
-            return {
-                "version": nm.version,
-                "n_clusters": n_clusters,
-                "centroids": cents,
-            }
-    raise ConcurrentCommitError(
-        "recluster lost the publish CAS to a concurrent commit; pause the "
-        "append writer and re-run (a full-table rewrite cannot win against "
-        "a live stream)"
-    )
+        props = {**m.properties, "ivf.centroids": _json.dumps(cents)}
+        version = table._rewrite_table(m, assigned, "recluster", n_clusters, props)
+    return {"version": version, "n_clusters": n_clusters, "centroids": cents}
 
 
 def ivf_lake_topk(

@@ -54,3 +54,14 @@ def events_df(spark):
         return spark.createDataFrame(rows, EVENTS_SCHEMA)
 
     return make
+
+
+def assert_cold_manifest_matches(table):
+    """The snapshot a commit primed into the manifest cache (what its
+    writer sees) must equal what a cold reader rebuilds from the log."""
+    from etlbox_spark.engine import lake
+
+    hot = table.manifest()
+    with lake._MANIFEST_CACHE_LOCK:
+        lake._MANIFEST_CACHE.clear()
+    assert lake.LakeTable.load(table.root).manifest().to_json() == hot.to_json()

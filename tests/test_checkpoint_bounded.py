@@ -62,22 +62,13 @@ def test_skipped_epochs_not_in_fast_resume_index(tmp_path):
     assert json.load(open(ck.path))["done_runs"] == [[0, 0], [2, 2]]
 
 
-def test_legacy_state_migrates_into_journal(tmp_path):
+def test_state_without_done_runs_fails_fast(tmp_path):
+    # a state file this module did not write must not be read as an
+    # empty fast-resume index: load() names the file instead
     p = tmp_path / "c.json"
-    legacy = {
-        "last_epoch": 1,
-        "epochs": {
-            "0": {"version": 1, "skipped": False, "counts": {}, "changed_buckets": [], "offsets": {}},
-            "1": {"version": 2, "skipped": True, "counts": {}, "changed_buckets": [], "offsets": {}},
-        },
-    }
-    p.write_text(json.dumps(legacy))
-    ck = Checkpoint(str(p))
-    assert ck.done_epochs() == {0}  # runs synthesized from the legacy dict
-    ck.record(_res(2))
-    # legacy entries landed in the journal before any trimming could drop them
-    assert [e["epoch"] for e in ck.lineage()] == [0, 1, 2]
-    assert ck.done_epochs() == {0, 2}
+    p.write_text(json.dumps({"last_epoch": 1, "epochs": {}}))
+    with pytest.raises(ValueError, match="c.json"):
+        Checkpoint(str(p)).done_epochs()
 
 
 def test_duplicate_journal_lines_tolerated(tmp_path):
@@ -115,33 +106,3 @@ def test_torn_journal_append_is_isolated_and_skipped(tmp_path):
     trail = list(ck.lineage())
     assert [e["epoch"] for e in trail] == [0, 2]
     assert trail[-1]["version"] == 3  # epoch 2's record is intact
-
-
-def test_crashed_legacy_migration_retries(tmp_path, monkeypatch):
-    # a crash mid-migration must leave NO journal (atomic temp+rename),
-    # so the retry re-migrates instead of trusting a truncated trail
-    p = tmp_path / "c.json"
-    legacy = {
-        "last_epoch": 1,
-        "epochs": {
-            str(e): {"version": e + 1, "skipped": False, "counts": {},
-                     "changed_buckets": [], "offsets": {}}
-            for e in range(2)
-        },
-    }
-    p.write_text(json.dumps(legacy))
-    ck = Checkpoint(str(p))
-    real_replace = __import__("os").replace
-
-    def crash_on_journal(src, dst):
-        if dst == ck.journal_path:
-            raise OSError("simulated crash before the journal rename")
-        return real_replace(src, dst)
-
-    monkeypatch.setattr("os.replace", crash_on_journal)
-    with pytest.raises(OSError, match="simulated crash"):
-        ck.record(_res(2))
-    monkeypatch.undo()
-    assert not __import__("os").path.exists(ck.journal_path)  # no half-journal
-    ck.record(_res(2))  # retry migrates THEN records
-    assert [e["epoch"] for e in ck.lineage()] == [0, 1, 2]

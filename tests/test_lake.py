@@ -12,7 +12,7 @@ from pyspark.sql import types as T
 from etlbox_spark.engine.lake import BUCKET_COL, LakeTable
 from etlbox_spark.functions.hashing import bucket_expr
 
-from .conftest import REPO_FILES_SCHEMA
+from .conftest import REPO_FILES_SCHEMA, assert_cold_manifest_matches
 
 
 def _rows_df(spark, rows, n_buckets=8):
@@ -138,7 +138,9 @@ def test_truncate_and_overwrite(spark, tmp_path):
     df = _rows_df(spark, [("r0", "p1", "c1", "py", "A")])
     bs = [r[0] for r in df.select(BUCKET_COL).distinct().collect()]
     t.commit_buckets(df, bs, epoch_id=0)
+    assert_cold_manifest_matches(t)
     t.truncate(epoch_id=1)
+    assert_cold_manifest_matches(t)
     assert t.row_count() == 0
     t.overwrite(_rows_df(spark, [("r1", "q", "c", "py", "Z")]), epoch_id=2)
     assert t.row_count() == 1
@@ -217,7 +219,7 @@ def test_vacuum_spares_in_flight_commit_files(spark, tmp_path):
     t.commit_buckets(df, [0, 1], 0)
     time.sleep(0.05)  # ensure the orphan's mtime is after the manifest's
     # simulate the in-flight commit: data written, manifest not yet published
-    entries = t._write_data(df, "c99-e99", ["repo", "path"])
+    entries = t._write_data(df, "c99-e99", t.manifest())
     orphan = os.path.join(t.root, entries[0]["path"])
     assert os.path.exists(orphan)
     stats = t.vacuum(keep_versions=1)
@@ -412,6 +414,7 @@ def test_set_properties_validates_and_records_history(spark, tmp_path):
     v1 = t.set_properties({"write.sort.cols": "khash", "owner": "teamX"})
     assert v1 == v0 + 1
     assert t.manifest().properties == {"write.sort.cols": "khash", "owner": "teamX"}
+    assert_cold_manifest_matches(t)
     assert t.history()[0]["operation"] == "set_properties"
     # no-op set does not burn a version
     assert t.set_properties({"write.sort.cols": "khash"}) == v1
@@ -498,6 +501,7 @@ def test_rollback_restores_snapshot_and_epoch_markers(spark, tmp_path):
     t.set_properties({"write.sort.cols": "khash"})  # tuning landed after
 
     v = t.rollback(good_v)
+    assert_cold_manifest_matches(t)
     m = t.manifest()
     assert v == m.version and m.operation == "rollback"
     assert m.committed_epochs == [0]  # epoch 1 unmarked -> re-applies

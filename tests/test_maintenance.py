@@ -10,7 +10,7 @@ import os
 from etlbox_spark.engine import LakeTable, MergeMode, MergeSpec, apply_epoch
 from etlbox_spark.functions.hashing import content_sha256
 
-from .conftest import EVENTS_SCHEMA, REPO_FILES_SCHEMA, ev
+from .conftest import EVENTS_SCHEMA, REPO_FILES_SCHEMA, assert_cold_manifest_matches, ev
 
 SPEC = MergeSpec(compare_cols=("content",))
 
@@ -47,6 +47,7 @@ def test_rebucket_preserves_content_and_markers(spark, tmp_path):
     before = _state(spark, t)
     m = t.manifest()
     v = t.rebucket(spark, 8)
+    assert_cold_manifest_matches(t)
     m2 = t.manifest()
     assert m2.version == v and m2.n_buckets == 8
     assert {e["bucket"] for e in m2.files} <= set(range(8))
@@ -161,6 +162,7 @@ def test_delete_where_rewrites_only_hit_buckets(spark, tmp_path):
     pre_v = t.latest_version()
 
     res = t.delete_where(spark, "path LIKE 'p1_%'")  # epoch 1's three rows
+    assert_cold_manifest_matches(t)
     assert res["rows_deleted"] == 3 and res["buckets_rewritten"] >= 1
     got = _state(spark, t)
     assert got == {k: v for k, v in pre_state.items() if not k[1].startswith("p1_")}

@@ -13,7 +13,7 @@ import os
 
 from etlbox_spark.engine import LakeTable, MergeMode, MergeSpec, apply_epoch
 
-from .conftest import EVENTS_SCHEMA, REPO_FILES_SCHEMA, ev
+from .conftest import EVENTS_SCHEMA, REPO_FILES_SCHEMA, assert_cold_manifest_matches, ev
 
 SPEC = MergeSpec(compare_cols=("content",))
 
@@ -95,9 +95,11 @@ def test_compact_folds_deltas_and_preserves_state(spark, tmp_path):
     t = _mk(tmp_path, "t", True)
     for i, rows in enumerate(EPOCHS):
         _apply(spark, t, rows, i)
+    assert_cold_manifest_matches(t)
     before = _state(spark, t)
     n_files_before = len(t.manifest().files)
     stats = t.compact(spark)
+    assert_cold_manifest_matches(t)
     assert stats["buckets_compacted"] > 0
     assert stats["files_after"] < stats["files_before"]
     m = t.manifest()
@@ -140,7 +142,9 @@ def test_mor_crash_retry_overwrites_stale_attempt(spark, tmp_path):
     # simulate the crash: data written under the NEXT version's dir name,
     # manifest never published
     v = t.manifest().version
-    t._write_data(rows.withColumn("__order", F.lit(v + 1).cast("long")), f"d{v + 1}-e1", ["repo", "path"])
+    t._write_data(
+        rows.withColumn("__order", F.lit(v + 1).cast("long")), f"d{v + 1}-e1", t.manifest(), "delta"
+    )
     # retry through the real path
     res = _apply(spark, t, [ev(10, "update", "p2", "b2")], 1)
     assert not res.skipped

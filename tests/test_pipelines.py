@@ -29,6 +29,8 @@ from etlbox_spark.operators.similarity import (
 )
 from etlbox_spark.operators.textdedup import corpus_dedup_pipeline
 
+from .conftest import assert_cold_manifest_matches
+
 SF = "/root/testdata/sf0.001"
 
 
@@ -403,6 +405,7 @@ def test_ivf_lake_recluster_repairs_drifted_recall(spark, tmp_path):
     assert before < 1.0, "fixture must actually split the drifted cluster"
 
     res = ivf_lake_recluster(spark, t, k=3, iters=4)
+    assert_cold_manifest_matches(t)
     assert res["n_clusters"] == 3 and t.manifest().n_buckets == 3
     assert t.manifest().operation == "recluster"
     assert 2 in t.manifest().committed_epochs  # append markers preserved
