@@ -80,6 +80,7 @@ from pyspark.sql import types as T
 
 from .lake import (
     KHASH_COL,
+    STALE_ATTEMPT_S,
     LakeTable,
     Manifest,
     _apply_delta_record,
@@ -93,7 +94,6 @@ from .lake import (
 # is presumed to belong to an in-flight commit, not orphaned garbage —
 # same window vacuum uses to spare freshly written files
 _INFLIGHT_GRACE_S = 60.0
-_STALE_MARKER_S = 86400.0
 
 
 def _err(report: dict, code: str, detail: str) -> None:
@@ -362,14 +362,14 @@ def _check_delta_log(
                         report,
                         "unhealed-inflight-log",
                         f"{kind}: epoch {n} committed but its attempt dir was "
-                        "never finalized (healed on the next replay/read)",
+                        "never finalized (healed on the next replay of that epoch)",
                     )
                 else:
                     try:
                         age = now - os.path.getmtime(p)
                     except OSError:
                         continue
-                    if age > _STALE_MARKER_S:
+                    if age > STALE_ATTEMPT_S:
                         _warn(report, "stale-log-attempt", f"{kind}: {fn} (crashed writer?)")
         return eps
 
@@ -403,7 +403,7 @@ def _check_delta_log(
                     age = now - os.path.getmtime(os.path.join(mroot, fn))
                 except OSError:
                     continue
-                if age > _STALE_MARKER_S:
+                if age > STALE_ATTEMPT_S:
                     _warn(report, "stale-maint-attempt", f"_maint/{fn}")
                 continue
             if not fn.startswith("version="):
@@ -639,7 +639,7 @@ def fsck(
                 age = now - os.path.getmtime(os.path.join(meta, fn))
             except OSError:
                 continue  # removed concurrently — not stale
-            if age > _STALE_MARKER_S:
+            if age > STALE_ATTEMPT_S:
                 _warn(report, "stale-marker", f"{fn} is {age / 3600.0:.1f}h old (crashed writer?)")
 
     # 6. orphan data files (referenced by NO retained snapshot). If ANY

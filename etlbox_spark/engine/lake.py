@@ -99,6 +99,11 @@ _WRITE_PARTITION_COL = "bucket_p"
 # only (base files never carry them)
 MOR_OP_COL = "__op"        # 'upsert' | 'delete' (tombstone)
 MOR_ORDER_COL = "__order"  # manifest version the delta committed at
+# age past which an attempt dir (change-log ``_inflight-*``) or a writer
+# marker (``meta/_inflight.*``) counts as a crashed writer's leftover:
+# change-log expiry and the maintenance-feed heal sweep such attempts,
+# vacuum sweeps such markers by default, and fsck warns about them
+STALE_ATTEMPT_S = 86400.0
 # per-file key-hash stats column (SURVEY.md §4 partition pruning): every
 # data file stores xxhash64(key) as a regular column, so the parquet
 # footer yields exact min/max key-hash per file for free at write time.
@@ -357,33 +362,24 @@ _MAX_EPOCHS_FLAT = 50_000_000  # far above any real history; see below
 
 
 def _epochs_flat(v: "list") -> "list[int]":
-    """Parse either wire shape back to the in-memory flat sorted list:
-    ``[lo, hi]`` runs (current) or flat ints (pre-r05 records remain
-    readable — format compatibility, not a migration). Malformed runs
+    """Parse the ``[lo, hi]`` run wire shape back to the in-memory flat
+    sorted list. Any other item (a bare int included) and malformed runs
     raise ValueError LOUDLY: a tampered record like ``[[0, 10**15]]``
     must fail the parse, not OOM the driver materializing the range."""
     out: "list[int]" = []
     total = 0
     for item in v:
-        if isinstance(item, list):
-            if len(item) != 2:
-                raise ValueError(f"malformed epoch run {item!r:.80}")
-            lo, hi = int(item[0]), int(item[1])
-            if hi < lo:
-                raise ValueError(f"malformed epoch run [{lo}, {hi}] (hi < lo)")
-            total += hi - lo + 1
-            if total > _MAX_EPOCHS_FLAT:
-                raise ValueError(
-                    f"epoch history implausibly large (> {_MAX_EPOCHS_FLAT}) — corrupt run bounds?"
-                )
-            out.extend(range(lo, hi + 1))
-        else:
-            out.append(int(item))
-            total += 1
-            if total > _MAX_EPOCHS_FLAT:
-                raise ValueError(
-                    f"epoch history implausibly large (> {_MAX_EPOCHS_FLAT}) — corrupt record?"
-                )
+        if not isinstance(item, list) or len(item) != 2:
+            raise ValueError(f"malformed epoch run {item!r:.80}")
+        lo, hi = int(item[0]), int(item[1])
+        if hi < lo:
+            raise ValueError(f"malformed epoch run [{lo}, {hi}] (hi < lo)")
+        total += hi - lo + 1
+        if total > _MAX_EPOCHS_FLAT:
+            raise ValueError(
+                f"epoch history implausibly large (> {_MAX_EPOCHS_FLAT}) — corrupt run bounds?"
+            )
+        out.extend(range(lo, hi + 1))
     out.sort()
     return out
 
@@ -627,7 +623,7 @@ class LakeTable:
                 _cache_put(k, m)
         return m
 
-    def _publish(self, m: Manifest) -> bool:
+    def _publish(self, m: Manifest, extra: "dict[str, Any] | None" = None) -> bool:
         """Optimistic-CAS publish: creating ``meta/v{N}.json`` IS the
         commit. The content is fully written + fsynced to a temp file,
         then hard-linked into place — create-exclusive, so at most ONE
@@ -637,7 +633,9 @@ class LakeTable:
 
         What hits disk is the commit's DELTA RECORD when ``m`` came from
         ``_delta_successor`` (``m._delta`` — O(commit) bytes), else the
-        full state (create/rollback/``_rewrite_table``). The in-memory
+        full state (create/rollback/``_rewrite_table``), with ``extra``'s
+        record-level keys (rollback's ``change_token``; a delta record
+        carries its keys itself). The in-memory
         ``m`` is primed into the snapshot cache either way (for a delta
         commit it is already the reader's replay of that record), so the
         winner's next ``manifest()`` is a dict hit; every
@@ -649,7 +647,7 @@ class LakeTable:
         if delta is not None:
             payload = json.dumps(delta, sort_keys=True)
         else:
-            payload = m.to_json(extra=getattr(m, "_record_extra", None))
+            payload = m.to_json(extra=extra)
         mpath = self._vpath(m.version)
         tmp = f"{mpath}.tmp.{uuid.uuid4().hex[:8]}"
         with open(tmp, "w", encoding="utf-8") as f:
@@ -822,7 +820,7 @@ class LakeTable:
         feeds only matching-hash rows into the merge shuffle instead of
         the whole bucket. Exact for probed keys: a row of a probed key
         always carries that key's hash (same column the write path
-        stamped); null-hash rows (pre-khash legacy files) are kept."""
+        stamped)."""
         cur = m.schema()
         extra = extra_fields or []
         khash_fld = [T.StructField(KHASH_COL, T.LongType(), True)] if khash_in is not None else []
@@ -842,10 +840,7 @@ class LakeTable:
         for ver, paths in sorted(by_ver.items()):
             df = spark.read.schema(stored_extra(ver)).parquet(*paths)
             if khash_in is not None:
-                df = df.where(
-                    F.col(KHASH_COL).isNull()
-                    | F.col(KHASH_COL).isin([int(h) for h in khash_in])
-                )
+                df = df.where(F.col(KHASH_COL).isin([int(h) for h in khash_in]))
             exprs = []
             for fld in cur.fields:
                 if fld.name in df.columns:
@@ -1441,7 +1436,7 @@ class LakeTable:
                         os.replace(p, final)
                 continue
             with contextlib.suppress(OSError):
-                if _time.time() - os.path.getmtime(p) > 3600.0:
+                if _time.time() - os.path.getmtime(p) > STALE_ATTEMPT_S:
                     shutil.rmtree(p)
 
     def _emit_maintenance_changes(
@@ -1968,9 +1963,7 @@ class LakeTable:
                     properties=m.properties,
                     operation="rollback",
                 )
-                if emit_changes:
-                    nm._record_extra = {"change_token": token}
-                if self._publish(nm):
+                if self._publish(nm, {"change_token": token} if emit_changes else None):
                     missing = _missing()
                     if missing:
                         if tmp is not None:
@@ -2045,15 +2038,18 @@ class LakeTable:
         """
         from ..functions.hashing import bucket_expr
 
-        m = self.manifest()
-        if m.properties.get("bucketing", "khash") != "khash":
-            raise ValueError(
-                "rebucket rewrites under the key-hash bucket function; this "
-                f"table is bucketing={m.properties['bucketing']!r}"
-            )
-        if new_n_buckets == m.n_buckets:
-            return m.version
+        # the marker goes up BEFORE the snapshot is resolved: a live
+        # marker is what pins that snapshot against a concurrent vacuum
+        # (compact's and delete_where's rule)
         with self._inflight_guard():
+            m = self.manifest()
+            if m.properties.get("bucketing", "khash") != "khash":
+                raise ValueError(
+                    "rebucket rewrites under the key-hash bucket function; this "
+                    f"table is bucketing={m.properties['bucketing']!r}"
+                )
+            if new_n_buckets == m.n_buckets:
+                return m.version
             df = self.read(spark, with_bucket=False, version=m.version).withColumn(
                 BUCKET_COL, bucket_expr(new_n_buckets, *m.key_cols)
             )
@@ -2143,7 +2139,7 @@ class LakeTable:
         self,
         keep_versions: int = 1,
         grace_s: float = 0.0,
-        inflight_max_age_s: float = 86400.0,
+        inflight_max_age_s: float = STALE_ATTEMPT_S,
         dry_run: bool = False,
     ) -> dict[str, int]:
         """Delete data files referenced only by manifests older than the

@@ -32,7 +32,9 @@ from __future__ import annotations
 import contextlib
 import json
 import os
+import re
 import shutil
+import time
 from dataclasses import dataclass, field
 
 import pyarrow.parquet as pq
@@ -42,13 +44,16 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.hashing import bucket_expr
-from .lake import BUCKET_COL, MOR_OP_COL, LakeTable
+from ..operators.dedupe import dedupe_lww as _dedupe_lww
+from .lake import BUCKET_COL, MOR_OP_COL, STALE_ATTEMPT_S, LakeTable
 from .spec import ChangeAction, MergeMode, MergeSpec
 
 ACTION_COL = "action"
 
 
-def _delta_paths(delta_dir: str, epoch_id: int) -> tuple[str, str]:
+def _epoch_log_paths(root: str, epoch_id: int) -> tuple[str, str]:
+    """(in-flight, final) dirs of epoch N in an epoch log under ``root``
+    — the delta log itself, or ``…/_quarantine``."""
     # the temp name starts with "_" so Spark's listing skips an in-flight
     # epoch — and it must NOT contain "=": Spark's path filter keeps
     # underscore names that look like partition dirs (name.contains("=")),
@@ -56,54 +61,123 @@ def _delta_paths(delta_dir: str, epoch_id: int) -> tuple[str, str]:
     # column and break read_changes over the whole delta log (caught by
     # test_read_changes_incremental_feed)
     return (
-        os.path.join(delta_dir, f"_inflight-epoch-{epoch_id}"),
-        os.path.join(delta_dir, f"epoch={epoch_id}"),
+        os.path.join(root, f"_inflight-epoch-{epoch_id}"),
+        os.path.join(root, f"epoch={epoch_id}"),
     )
 
 
-def _quarantine_paths(root: str, epoch_id: int) -> tuple[str, str]:
-    qroot = os.path.join(root, "_quarantine")
-    return (
-        os.path.join(qroot, f"_inflight-epoch-{epoch_id}"),
-        os.path.join(qroot, f"epoch={epoch_id}"),
-    )
+def _stage_epoch_log(df: DataFrame, root: str, epoch_id: int) -> str:
+    """Write an uncommitted epoch's rows under its in-flight name and
+    return that path. ``mode("overwrite")`` replaces a crashed attempt's
+    rows; the epoch is not committed (the marker no-op returns before
+    staging), so a visible final dir is a failed attempt's garbage."""
+    tmp, final = _epoch_log_paths(root, epoch_id)
+    shutil.rmtree(final, ignore_errors=True)
+    df.write.mode("overwrite").parquet(tmp)
+    return tmp
 
 
-def _finalize_quarantine(root: str, epoch_id: int) -> None:
-    """Expose a committed epoch's dead-letter rows — same rename protocol
-    as the delta log, so a visible ``_quarantine/epoch=N`` IMPLIES epoch
-    N committed (a crashed attempt's rows stay under the in-flight name,
-    invisible to ``read_quarantine``'s listing, and are overwritten by
-    the retry). Idempotent; no-op when the epoch quarantined nothing."""
-    tmp, final = _quarantine_paths(root, epoch_id)
-    # any actor retrying a committed epoch heals here, so two healers can
-    # race: the loser's rmtree/replace finds the source already gone —
-    # the winner established exactly this postcondition, so tolerate it
+def _finalize_epoch_log(root: str, epoch_id: int) -> None:
+    """Expose a committed epoch's staged rows: rename the in-flight dir
+    to ``epoch=N``, so a visible ``epoch=N`` IMPLIES epoch N committed.
+    A visible final wins — a leftover attempt dir is then stale and
+    removed. Idempotent; a no-op when nothing was staged. Any actor
+    retrying a committed epoch heals a crashed rename here (VERDICT r02
+    #6), so two healers can race: the loser's rmtree/replace finds the
+    source already gone — the winner established exactly this
+    postcondition, so tolerate it."""
+    tmp, final = _epoch_log_paths(root, epoch_id)
     with contextlib.suppress(OSError):
         if os.path.exists(final):
-            if os.path.exists(tmp):  # final implies committed; tmp is stale
+            if os.path.exists(tmp):
                 shutil.rmtree(tmp)
             return
         if os.path.exists(tmp):
             os.replace(tmp, final)
 
 
-def _finalize_delta(delta_dir: str, epoch_id: int) -> None:
-    """Atomically expose a committed epoch's delta log: rename the
-    in-flight directory to its final ``epoch=N`` name. Idempotent — a
-    retry of a committed epoch whose rename crashed mid-window heals it
-    here (VERDICT r02 #6: previously the delta landed under its final
-    name BEFORE commit, so a crash in between left a visible epoch=N dir
-    for an epoch that never committed)."""
-    tmp, final = _delta_paths(delta_dir, epoch_id)
-    # concurrent healers (any actor retrying a committed epoch lands
-    # here) can race on the same rename — the loser's vanished source
-    # means the winner already established the postcondition
-    with contextlib.suppress(OSError):
-        if os.path.exists(final):
-            return
-        if os.path.exists(tmp):
-            os.replace(tmp, final)
+def _finalize_logs(lake: LakeTable, delta_dir: str | None, epoch_id: int) -> None:
+    """Finalize a committed epoch's delta log and quarantine log."""
+    if delta_dir is not None:
+        _finalize_epoch_log(delta_dir, epoch_id)
+    qbase = delta_dir if delta_dir is not None else lake.root
+    _finalize_epoch_log(os.path.join(qbase, "_quarantine"), epoch_id)
+
+
+def _log_ids(root: str, part: str) -> list[int]:
+    """Sorted ids of the committed ``{part}=ID`` dirs under ``root``. A
+    name whose suffix is not an int (external tooling debris) is not a
+    committed dir; a missing root is an empty log."""
+    try:
+        names = os.listdir(root)
+    except FileNotFoundError:
+        return []
+    ids = []
+    for n in names:
+        if n.startswith(f"{part}="):
+            with contextlib.suppress(ValueError):
+                ids.append(int(n[len(part) + 1:]))
+    return sorted(ids)
+
+
+def _read_log(
+    spark: SparkSession, root: str, part: str, lo: int | None, hi: int | None
+) -> DataFrame | None:
+    """The committed ``{part}=ID`` dirs of a log with ``lo <= ID <= hi``
+    (either bound optional), schema generations folded. A range holding
+    none of the committed ids yields an EMPTY frame with the newest
+    dir's schema; a log with no committed dir returns None."""
+    all_ids = _log_ids(root, part)
+    if not all_ids:
+        return None
+    ids = [i for i in all_ids if (lo is None or i >= int(lo)) and (hi is None or i <= int(hi))]
+    if ids:
+        return _read_generations(spark, root, part, ids)
+    sch = _probe_dir_schemas(spark, [os.path.join(root, f"{part}={all_ids[-1]}")])[0]
+    return spark.createDataFrame(
+        [], T.StructType(list(sch.fields) + [T.StructField(part, T.IntegerType(), True)])
+    )
+
+
+# in-flight attempt dirs: ``_inflight-epoch-N`` (epoch logs) and
+# ``_inflight-v{V}-{token}`` (the maintenance feed, lake.py)
+_ATTEMPT_RE = re.compile(r"_inflight-(?:epoch-|v)(\d+)(?:-.*)?")
+
+
+def _expire_log(root: str, part: str, before: int) -> tuple[int, int]:
+    """Retention for one log: a committed dir goes when its id is below
+    ``before``; an in-flight attempt dir goes when its id is below
+    ``before`` AND it is older than ``STALE_ATTEMPT_S`` — a live retry of
+    an old id may be mid-write or about to rename it, and an attempt at
+    or above the cutoff may be a committed-but-unrenamed set still inside
+    retention. Returns (removed, kept committed dirs)."""
+
+    def _rm(p: str) -> bool:
+        # a concurrent expire (or any cleanup actor) can delete the same
+        # dir between this sweep's listing and its rmtree — the
+        # postcondition already holds, so a vanished target is the OTHER
+        # actor's removal, not this sweep's failure
+        try:
+            shutil.rmtree(p)
+            return True
+        except OSError:
+            return False
+
+    removed = kept = 0
+    for i in _log_ids(root, part):
+        if i < before:
+            removed += _rm(os.path.join(root, f"{part}={i}"))
+        else:
+            kept += 1
+    now = time.time()
+    with contextlib.suppress(FileNotFoundError):
+        for name in os.listdir(root):
+            m = _ATTEMPT_RE.fullmatch(name)
+            p = os.path.join(root, name)
+            with contextlib.suppress(OSError):
+                if m and int(m[1]) < before and now - os.path.getmtime(p) > STALE_ATTEMPT_S:
+                    removed += _rm(p)
+    return removed, kept
 
 
 def _fold_fields(
@@ -314,24 +388,10 @@ def read_changes(
     with no committed epochs at all raises ``FileNotFoundError`` —
     that's indistinguishable from a wrong path.
     """
-    all_eps = sorted(
-        int(n.split("=", 1)[1])
-        for n in os.listdir(delta_dir)
-        if n.startswith("epoch=")
-    )
-    if not all_eps:
+    df = _read_log(spark, delta_dir, "epoch", from_epoch, to_epoch)
+    if df is None:
         raise FileNotFoundError(f"no committed epochs under {delta_dir}")
-    eps = all_eps
-    if from_epoch is not None:
-        eps = [e for e in eps if e >= int(from_epoch)]
-    if to_epoch is not None:
-        eps = [e for e in eps if e <= int(to_epoch)]
-    if not eps:
-        sch = _probe_dir_schemas(spark, [os.path.join(delta_dir, f"epoch={all_eps[-1]}")])[0]
-        empty = T.StructType(list(sch.fields) + [T.StructField("epoch", T.IntegerType(), True)])
-        return spark.createDataFrame([], empty)
-
-    return _read_generations(spark, delta_dir, "epoch", eps)
+    return df
 
 
 def read_maintenance_changes(
@@ -362,29 +422,10 @@ def read_maintenance_changes(
     A delta log with no maintenance sets at all raises
     ``FileNotFoundError`` (indistinguishable from a wrong path)."""
     mroot = os.path.join(delta_dir, "_maint")
-    all_vs = (
-        sorted(
-            int(n.split("=", 1)[1])
-            for n in os.listdir(mroot)
-            if n.startswith("version=")
-        )
-        if os.path.isdir(mroot)
-        else []
-    )
-    if not all_vs:
+    df = _read_log(spark, mroot, "version", from_version, to_version)
+    if df is None:
         raise FileNotFoundError(f"no committed maintenance change sets under {mroot}")
-    vs = all_vs
-    if from_version is not None:
-        vs = [v for v in vs if v >= int(from_version)]
-    if to_version is not None:
-        vs = [v for v in vs if v <= int(to_version)]
-    if not vs:
-        sch = _probe_dir_schemas(spark, [os.path.join(mroot, f"version={all_vs[-1]}")])[0]
-        empty = T.StructType(
-            list(sch.fields) + [T.StructField("version", T.IntegerType(), True)]
-        )
-        return spark.createDataFrame([], empty)
-    return _read_generations(spark, mroot, "version", vs)
+    return df
 
 
 def expire_changes(
@@ -393,95 +434,30 @@ def expire_changes(
     """Change-feed retention: drop committed delta-log epochs older than
     ``before_epoch`` (exclusive). The log otherwise grows forever — one
     dir per epoch — and consumers that have checkpointed past an epoch
-    never read it again. In-flight attempt dirs are left alone (a live
-    retry may still rename one into place); the table itself is
-    untouched (the delta log is derived data — snapshots and epoch
-    markers live in the lake manifest).
+    never read it again. The quarantine log (``_quarantine/epoch=N``)
+    expires with it. Every log follows ``_expire_log``'s rule: in-flight
+    attempt dirs go only once below the cutoff AND stale (a live retry
+    may still rename one into place). The table itself is untouched
+    (the delta log is derived data — snapshots and epoch markers live in
+    the lake manifest).
 
-    ``before_maintenance_version`` (r05) independently expires committed
+    ``before_maintenance_version`` (r05) independently expires
     maintenance change sets (``_maint/version=V``) below it — their
-    lifecycle is keyed by lake commit version, not epoch; in-flight
-    maintenance dirs age out like quarantine's.
+    lifecycle is keyed by lake commit version, not epoch.
 
-    Returns ``{"removed": n, "kept": m}``.
+    Returns ``{"removed": n, "kept": m}``; ``kept`` counts the committed
+    dirs of every swept log that stay.
     """
+    logs = [
+        (delta_dir, "epoch", before_epoch),
+        (os.path.join(delta_dir, "_quarantine"), "epoch", before_epoch),
+    ]
+    if before_maintenance_version is not None:
+        logs.append((os.path.join(delta_dir, "_maint"), "version", before_maintenance_version))
     removed = kept = 0
-
-    def _rm(p: str) -> bool:
-        # a concurrent expire (or any cleanup actor) can delete the same
-        # dir between this sweep's listing and its rmtree — the
-        # postcondition already holds, so a vanished target is the OTHER
-        # actor's removal, not this sweep's failure
-        try:
-            shutil.rmtree(p)
-            return True
-        except OSError:
-            return False
-
-    def _suffix_int(name: str) -> int | None:
-        # tolerant parse: a malformed/truncated dir name must not abort
-        # the whole expiry sweep (same rule as quarantine's, ADVICE r04)
-        try:
-            return int(name.split("=", 1)[1])
-        except ValueError:
-            return None
-
-    for name in sorted(os.listdir(delta_dir)):
-        if not name.startswith("epoch="):
-            continue
-        ep = _suffix_int(name)
-        if ep is None:
-            continue
-        if ep < before_epoch:
-            removed += _rm(os.path.join(delta_dir, name))
-        else:
-            kept += 1
-    qroot = os.path.join(delta_dir, "_quarantine")
-    if os.path.isdir(qroot):
-        import time as _time
-
-        now = _time.time()
-        for name in sorted(os.listdir(qroot)):
-            if name.startswith("epoch="):
-                ep = _suffix_int(name)
-                if ep is not None and ep < before_epoch:
-                    removed += _rm(os.path.join(qroot, name))
-            elif name.startswith("_inflight-epoch-"):
-                # crashed attempts' in-flight dirs are garbage ONLY once
-                # aged: a LIVE retry of an old epoch may be mid-write or
-                # about to rename this very dir (the same reason the
-                # delta log's own in-flight dirs are left alone), so
-                # sweep on (below-cutoff AND older than a day), never on
-                # epoch number alone
-                p = os.path.join(qroot, name)
-                # tolerant parse (ADVICE r04): a malformed/truncated dir
-                # name ("_inflight-epoch-") must not abort the whole
-                # expiry sweep — skip it like the other listings do
-                with contextlib.suppress(OSError, ValueError):
-                    ep = int(name.rsplit("-", 1)[-1])
-                    if ep < before_epoch and now - os.path.getmtime(p) > 86400.0:
-                        removed += _rm(p)
-    mroot = os.path.join(delta_dir, "_maint")
-    if before_maintenance_version is not None and os.path.isdir(mroot):
-        import time as _time
-
-        now = _time.time()
-        for name in sorted(os.listdir(mroot)):
-            p = os.path.join(mroot, name)
-            if name.startswith("version="):
-                v = _suffix_int(name)
-                if v is None:
-                    continue
-                if v < before_maintenance_version:
-                    removed += _rm(p)
-                else:
-                    kept += 1
-            elif name.startswith("_inflight-"):
-                # a live delete/rollback may be about to finalize this
-                # very dir — only aged leftovers are garbage
-                with contextlib.suppress(OSError):
-                    if now - os.path.getmtime(p) > 86400.0:
-                        removed += _rm(p)
+    for root, part, before in logs:
+        r, k = _expire_log(root, part, before)
+        removed, kept = removed + r, kept + k
     return {"removed": removed, "kept": kept}
 
 
@@ -514,7 +490,7 @@ def _route_malformed(
     outrank a valid one in the last-writer-wins window. Quarantined rows
     are written under an in-flight name and renamed to
     ``{root}/_quarantine/epoch=N`` only after the epoch COMMITS
-    (``_finalize_quarantine``) — the delta log's rename protocol, so
+    (``_finalize_logs``) — the delta log's rename protocol, so
     dead letters are never visible for an epoch that didn't commit, and
     a crashed attempt's rows (including a stale dir from a retry that
     turned out clean) can't linger as phantoms. The underscore parent is
@@ -538,12 +514,7 @@ def _route_malformed(
         return events, 0
     if spec.on_malformed != "quarantine":
         raise ValueError(f"unknown on_malformed policy {spec.on_malformed!r}")
-    tmp, final = _quarantine_paths(root, epoch_id)
-    # the epoch is not committed (the marker no-op returns before this),
-    # so a visible final dir here is a pre-rename-era attempt's garbage
-    shutil.rmtree(final, ignore_errors=True)
-    bad = events.where(bad_pred)
-    bad.write.mode("overwrite").parquet(tmp)
+    tmp = _stage_epoch_log(events.where(bad_pred), os.path.join(root, "_quarantine"), epoch_id)
     n = sum(
         pq.ParquetFile(os.path.join(tmp, f)).metadata.num_rows
         for f in os.listdir(tmp)
@@ -577,28 +548,10 @@ def read_quarantine(
     raw events evolve with the table: epochs before a column-add surface
     typed nulls, a numeric widen upcasts) — previously a range spanning
     a widen failed on the parquet physical-type change."""
-    qroot = os.path.join(delta_dir, "_quarantine")
-    all_eps = (
-        sorted(
-            int(n.split("=", 1)[1])
-            for n in os.listdir(qroot)
-            if n.startswith("epoch=")
-        )
-        if os.path.isdir(qroot)
-        else []
-    )
-    eps = all_eps
-    if from_epoch is not None:
-        eps = [e for e in eps if e >= from_epoch]
-    if to_epoch is not None:
-        eps = [e for e in eps if e <= to_epoch]
-    if not eps:
-        if all_eps:
-            sch = _probe_dir_schemas(spark, [os.path.join(qroot, f"epoch={all_eps[-1]}")])[0]
-            fields = list(sch.fields) + [T.StructField("epoch", T.IntegerType(), True)]
-            return spark.createDataFrame([], T.StructType(fields))
+    df = _read_log(spark, os.path.join(delta_dir, "_quarantine"), "epoch", from_epoch, to_epoch)
+    if df is None:
         return spark.createDataFrame([], T.StructType([T.StructField("epoch", T.IntegerType())]))
-    return _read_generations(spark, qroot, "epoch", eps)
+    return df
 
 
 @dataclass
@@ -616,8 +569,10 @@ def dedupe_lww(events: DataFrame, spec: MergeSpec) -> DataFrame:
     the highest ``seq_col``. Re-delivered duplicates (same seq, same
     payload) collapse for free.
 
-    Implemented as ``groupBy(keys).agg(max_by(struct(rest), seq))`` —
-    a single shuffle with map-side partial aggregation (see module doc).
+    ``operators.dedupe.dedupe_lww`` keyed on ``spec.key_cols`` and
+    ordered by ``spec.seq_col``: ``groupBy(keys).agg(max_by(struct(rest),
+    seq))`` — a single shuffle with map-side partial aggregation (see
+    module doc).
 
     Duplicate-seq events with DIFFERENT payloads are an upstream protocol
     violation, but the survivor must still be deterministic (replay/
@@ -627,18 +582,7 @@ def dedupe_lww(events: DataFrame, spec: MergeSpec) -> DataFrame:
     the full payload struct instead would double the combiner state on
     this 10^10-row shuffle).
     """
-    from ..operators.dedupe import payload_tie_break
-
-    keys = list(spec.key_cols)
-    rest = [c for c in events.columns if c not in keys]
-    ordering = F.struct(
-        F.col(spec.seq_col), payload_tie_break(events, rest).alias("__tie")
-    )
-    return (
-        events.groupBy(*keys)
-        .agg(F.max_by(F.struct(*rest), ordering).alias("__last"))
-        .select(*keys, "__last.*")
-    )
+    return _dedupe_lww(events, spec.key_cols, [spec.seq_col])
 
 
 _WIDEN_RANK = {"byte": 0, "short": 1, "integer": 2, "long": 3, "float": 4, "double": 5}
@@ -819,11 +763,7 @@ def apply_epoch(
         if epoch_id in man.committed_epochs:
             # heal a crash between commit and delta-/quarantine-rename:
             # the epoch is committed, so expose its fully written logs
-            if delta_dir is not None:
-                _finalize_delta(delta_dir, epoch_id)
-            _finalize_quarantine(
-                delta_dir if delta_dir is not None else lake.root, epoch_id
-            )
+            _finalize_logs(lake, delta_dir, epoch_id)
             return MergeResult(epoch_id=epoch_id, version=man.version, skipped=True)
         return _apply_epoch_pinned(
             spark, lake, man, events, spec, mode, epoch_id, delta_dir
@@ -910,20 +850,12 @@ def _apply_epoch_pinned(
     # in-flight temp name and renamed to {delta_dir}/epoch=N only AFTER
     # the lake commit returns, so a visible epoch=N directory now IMPLIES
     # the epoch committed. A crash between commit and rename is healed on
-    # retry (_finalize_delta in the committed-epoch no-op branch above).
+    # retry (_finalize_logs in the committed-epoch no-op branch above).
     # Gating on lake.is_committed(N) remains a sound belt-and-braces for
     # external consumers but is no longer required for correctness.
     delta = j.where(F.col(ACTION_COL).isNotNull()).drop("__keep")
     if delta_dir is not None:
-        dpath, dfinal = _delta_paths(delta_dir, epoch_id)
-        # a retry of a crashed attempt overwrites the stale temp dir; a
-        # stale FINAL dir can only exist for a committed epoch (handled
-        # in the no-op branch), except when the previous attempt crashed
-        # after commit_buckets raised mid-publish — clear it defensively
-        if os.path.exists(dfinal):
-            shutil.rmtree(dfinal)
-        delta.write.mode("overwrite").parquet(dpath)
-        delta = spark.read.parquet(dpath)
+        delta = spark.read.parquet(_stage_epoch_log(delta, delta_dir, epoch_id))
     counts: dict[str, int] = {}
     if spec.on_malformed == "quarantine":
         counts["quarantine"] = n_quarantined
@@ -956,9 +888,7 @@ def _apply_epoch_pinned(
         version = lake.commit_buckets(
             new_rows, changed, epoch_id, new_schema=new_schema, base_version=man.version
         )
-    if delta_dir is not None:
-        _finalize_delta(delta_dir, epoch_id)
-    _finalize_quarantine(delta_dir if delta_dir is not None else lake.root, epoch_id)
+    _finalize_logs(lake, delta_dir, epoch_id)
     return MergeResult(
         epoch_id=epoch_id,
         version=version,

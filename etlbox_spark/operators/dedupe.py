@@ -125,8 +125,9 @@ def top_k_per_group_segmented(
     has). The hot key's serial window shrinks from its row count to
     segments·k rows; the first pass runs at (group × segment)
     parallelism. Segmentation is deterministic (xxhash64 of the row's
-    hashable columns by default — no rand(), replay-stable; MapType
-    columns are excluded because xxhash64 rejects them); pass
+    hashable columns by default — no rand(), replay-stable; columns
+    whose type contains a map at any depth are excluded because xxhash64
+    rejects them); pass
     ``salt_col`` to segment by a cheaper existing expression (e.g. the
     unique tiebreaker the order already requires).
     """
@@ -138,11 +139,8 @@ def top_k_per_group_segmented(
     if salt_col is not None:
         seg = salt_col
     else:
-        from pyspark.sql import types as T
-
         seg = F.xxhash64(*[
-            F.col(f.name) for f in df.schema.fields
-            if not isinstance(f.dataType, T.MapType)
+            F.col(f.name) for f in df.schema.fields if not _contains_map(f.dataType)
         ])
     local = df.withColumn("__seg", F.pmod(seg, F.lit(segments)))
     w_local = Window.partitionBy(*group_cols, "__seg").orderBy(*order_cols)

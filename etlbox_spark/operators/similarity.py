@@ -345,20 +345,23 @@ def ivf_lake_recluster(
     """
     import json as _json
 
-    m = table.manifest()
-    if "ivf.centroids" not in m.properties:
-        raise ValueError("not an IVF lake table (no pinned ivf.centroids property)")
-    vec_col = m.properties.get("ivf.vec_col", "embedding")
-    id_col = m.key_cols[0]
-    n_clusters = int(k) if k is not None else m.n_buckets
-    if not m.files:
-        # training on nothing would re-pin an EMPTY centroid set, which
-        # breaks every later probe (probe_clusters over []) — refuse
-        raise ValueError(
-            "cannot recluster an empty IVF store (no data files); "
-            "build or append first"
-        )
+    # the marker goes up BEFORE the snapshot is resolved: a live marker
+    # is what pins that snapshot against a concurrent vacuum (rebucket's
+    # rule)
     with table._inflight_guard():
+        m = table.manifest()
+        if "ivf.centroids" not in m.properties:
+            raise ValueError("not an IVF lake table (no pinned ivf.centroids property)")
+        vec_col = m.properties.get("ivf.vec_col", "embedding")
+        id_col = m.key_cols[0]
+        n_clusters = int(k) if k is not None else m.n_buckets
+        if not m.files:
+            # training on nothing would re-pin an EMPTY centroid set, which
+            # breaks every later probe (probe_clusters over []) — refuse
+            raise ValueError(
+                "cannot recluster an empty IVF store (no data files); "
+                "build or append first"
+            )
         df = table.read(spark, with_bucket=False, version=m.version)
         if df.isEmpty():
             # files exist but the merged state is all tombstones —

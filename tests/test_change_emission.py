@@ -305,8 +305,14 @@ def test_expire_maintenance_sets_independently(spark, tmp_path):
     r1 = t.delete_where(spark, "path = 'p1'", emit_changes=True, delta_dir=d)
     r2 = t.delete_where(spark, "path = 'p2'", emit_changes=True, delta_dir=d)
     assert read_maintenance_changes(spark, d).count() == 2
+    # a stale attempt at the cutoff may be a committed-but-unrenamed set
+    # still inside retention: only attempts below the cutoff age out
+    attempt = os.path.join(d, "_maint", f"_inflight-v{r2['version']}-0123456789ab")
+    os.makedirs(attempt)
+    os.utime(attempt, (1, 1))
     stats = expire_changes(d, before_epoch=0, before_maintenance_version=r2["version"])
     assert stats["removed"] == 1
+    assert os.path.isdir(attempt)
     left = read_maintenance_changes(spark, d).collect()
     assert [(r["path"], int(r["version"])) for r in left] == [("p2", r2["version"])]
     # range reads stay empty-safe after expiry

@@ -124,15 +124,16 @@ def test_crash_between_commit_and_delta_rename_heals_on_retry(spark, tmp_path, m
     lake commit but BEFORE the delta rename, the committed epoch's delta
     is exposed by the retry's no-op branch."""
     import os
+    import shutil
 
     from etlbox_spark.engine import merge as merge_mod
 
     t = LakeTable.create(str(tmp_path / "t"), REPO_FILES_SCHEMA, ["repo", "path"], 4)
-    real_fin = merge_mod._finalize_delta
-    monkeypatch.setattr(merge_mod, "_finalize_delta", lambda d, e: None)
+    real_fin = merge_mod._finalize_epoch_log
+    monkeypatch.setattr(merge_mod, "_finalize_epoch_log", lambda d, e: None)
     apply_epoch(spark, t, spark.createDataFrame(EPOCHS[0], EVENTS_SCHEMA),
                 SPEC, MergeMode.DELTA, 0, delta_dir=str(tmp_path / "d"))
-    monkeypatch.setattr(merge_mod, "_finalize_delta", real_fin)
+    monkeypatch.setattr(merge_mod, "_finalize_epoch_log", real_fin)
 
     assert t.is_committed(0)
     assert not os.path.exists(str(tmp_path / "d" / "epoch=0"))
@@ -142,6 +143,13 @@ def test_crash_between_commit_and_delta_rename_heals_on_retry(spark, tmp_path, m
     assert res.skipped
     d0 = spark.read.parquet(str(tmp_path / "d" / "epoch=0"))
     assert {r.action for r in d0.collect()} == {"insert"}
+    # a leftover attempt dir of the committed, visible epoch is stale:
+    # the visible final wins, and re-applying the epoch removes it
+    leftover = str(tmp_path / "d" / "_inflight-epoch-0")
+    shutil.copytree(str(tmp_path / "d" / "epoch=0"), leftover)
+    apply_epoch(spark, t, spark.createDataFrame(EPOCHS[0], EVENTS_SCHEMA),
+                SPEC, MergeMode.DELTA, 0, delta_dir=str(tmp_path / "d"))
+    assert not os.path.exists(leftover)
 
 
 def test_finalize_heal_survives_concurrent_healer(spark, tmp_path, monkeypatch):
@@ -157,7 +165,7 @@ def test_finalize_heal_survives_concurrent_healer(spark, tmp_path, monkeypatch):
     from etlbox_spark.engine import merge as merge_mod
 
     t = LakeTable.create(str(tmp_path / "t"), REPO_FILES_SCHEMA, ["repo", "path"], 4)
-    monkeypatch.setattr(merge_mod, "_finalize_delta", lambda d, e: None)
+    monkeypatch.setattr(merge_mod, "_finalize_epoch_log", lambda d, e: None)
     apply_epoch(spark, t, spark.createDataFrame(EPOCHS[0], EVENTS_SCHEMA),
                 SPEC, MergeMode.DELTA, 0, delta_dir=str(tmp_path / "d"))
     monkeypatch.undo()
@@ -186,8 +194,8 @@ def test_finalize_heal_survives_concurrent_healer(spark, tmp_path, monkeypatch):
         return real_replace(src, dst, *a, **kw)
 
     monkeypatch.setattr(os, "replace", racing_replace)
-    merge_mod._finalize_delta(d, 0)  # must not raise
-    merge_mod._finalize_quarantine(d, 0)  # must not raise
+    merge_mod._finalize_epoch_log(d, 0)  # must not raise
+    merge_mod._finalize_epoch_log(qroot, 0)  # must not raise
     monkeypatch.undo()
 
     d0 = spark.read.parquet(os.path.join(d, "epoch=0"))

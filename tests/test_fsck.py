@@ -11,6 +11,7 @@ import os
 import time
 
 from etlbox_spark.engine import LakeTable, MergeMode, MergeSpec, apply_epoch
+from etlbox_spark.engine.lake import _epoch_runs
 
 from .conftest import EVENTS_SCHEMA, REPO_FILES_SCHEMA, ev
 
@@ -108,7 +109,7 @@ def _write_ckpt(t, v, mutate=None):
         "current_schema_version": m.current_schema_version,
         "schemas": m.schemas,
         "files": [dict(e) for e in m.files],
-        "committed_epochs": m.committed_epochs,
+        "committed_epochs": _epoch_runs(m.committed_epochs),
         "parent": m.parent,
         "properties": m.properties,
         "operation": m.operation,

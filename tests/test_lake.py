@@ -284,9 +284,8 @@ def test_manifest_khash_stats_and_point_lookup_pruning(spark, tmp_path):
     assert got2 == {("r20", "p20", "base20")}
 
     # row-level half of the pruning: the probe read pushes a
-    # __khash IN (...) filter into the parquet scan (null-safe for
-    # legacy pre-khash files), so the surviving files' non-matching
-    # rows never enter the MoR merge shuffle
+    # __khash IN (...) filter into the parquet scan, so the surviving
+    # files' non-matching rows never enter the MoR merge shuffle
     import contextlib
     import io
 
@@ -296,7 +295,7 @@ def test_manifest_khash_stats_and_point_lookup_pruning(spark, tmp_path):
         probe_df.explain("formatted")
     plan = buf.getvalue()
     # one-element isin compiles to EqualTo; multi-element to In
-    assert "PushedFilters: [Or(IsNull(__khash)" in plan
+    assert "PushedFilters: [IsNotNull(__khash), " in plan
     assert f"EqualTo(__khash,{h})" in plan or "In(__khash" in plan
 
 
@@ -631,14 +630,14 @@ def test_rollback_reverts_when_racing_vacuum_won(spark, tmp_path, monkeypatch):
 
     real_publish = LakeTable._publish
 
-    def racing_publish(self, m):
+    def racing_publish(self, m, extra=None):
         # the racing vacuum lands exactly between precheck and publish
         for p in tgt_files:
             fp = os.path.join(self.root, p)
             if os.path.exists(fp):
                 os.remove(fp)
         monkeypatch.setattr(LakeTable, "_publish", real_publish)
-        return real_publish(self, m)
+        return real_publish(self, m, extra)
 
     monkeypatch.setattr(LakeTable, "_publish", racing_publish)
     with pytest.raises(ValueError, match="raced a vacuum"):

@@ -41,12 +41,24 @@ def test_no_intra_bucket_fragmentation(spark, tmp_path):
     assert all(n == 1 for n in per_bucket.values())
 
 
-def test_rebucket_preserves_content_and_markers(spark, tmp_path):
+def test_rebucket_preserves_content_and_markers(spark, tmp_path, monkeypatch):
     t = LakeTable.create(str(tmp_path / "t"), REPO_FILES_SCHEMA, ["repo", "path"], 2)
     _apply_n_epochs(spark, t)
     before = _state(spark, t)
     m = t.manifest()
+    # every snapshot rebucket resolves must be pinned by a live in-flight
+    # marker, or a concurrent vacuum could expire the files it reads
+    real_manifest = LakeTable.manifest
+    pinned = []
+
+    def spy(self, *a, **kw):
+        pinned.append(any(n.startswith("_inflight.") for n in os.listdir(self._meta_dir)))
+        return real_manifest(self, *a, **kw)
+
+    monkeypatch.setattr(LakeTable, "manifest", spy)
     v = t.rebucket(spark, 8)
+    monkeypatch.undo()
+    assert pinned and all(pinned)
     assert_cold_manifest_matches(t)
     m2 = t.manifest()
     assert m2.version == v and m2.n_buckets == 8

@@ -216,13 +216,14 @@ def test_epoch_rebase_across_interleaved_maintenance_chain(spark, tmp_path, monk
 def test_epoch_runs_wire_encoding_round_trips():
     """committed_epochs serialize as [lo, hi] runs (O(#gaps) — the last
     unbounded-per-checkpoint component at 10^5+ epochs) and parse back;
-    legacy flat-int records remain readable."""
+    the pre-r05 flat-int shape fails the parse."""
     from etlbox_spark.engine.lake import Manifest, _epoch_runs, _epochs_flat
 
     assert _epoch_runs([]) == []
     assert _epoch_runs([0, 1, 2, 5, 7, 8]) == [[0, 2], [5, 5], [7, 8]]
     assert _epochs_flat([[0, 2], [5, 5], [7, 8]]) == [0, 1, 2, 5, 7, 8]
-    assert _epochs_flat([0, 1, 2, 5]) == [0, 1, 2, 5]  # legacy flat
+    with pytest.raises(ValueError, match="malformed epoch run"):
+        _epochs_flat([0, 1, 2, 5])  # legacy flat
     # a dense 100k-epoch history costs ~one run on the wire, not 100k ints
     big = Manifest(
         version=3,

@@ -311,7 +311,7 @@ def test_dedupe_lww_tie_is_deterministic(spark):
 
 
 def test_dedupe_lww_payload_with_nested_map(spark):
-    from etlbox_spark.operators.dedupe import dedupe_lww
+    from etlbox_spark.operators.dedupe import dedupe_lww, top_k_per_group_segmented
 
     # xxhash64 rejects a map at any depth: a struct or array holding one
     # must stay out of the tie-break hash, or the plan fails at analysis
@@ -324,6 +324,11 @@ def test_dedupe_lww_payload_with_nested_map(spark):
     assert len(a) == len(b) == 1
     assert a[0]["v"] == b[0]["v"]
     assert a[0]["s"]["m"] == {"a": int(a[0]["v"].split("_")[1])}
+    # the segmented top-k's default segment hash follows the same rule
+    top = top_k_per_group_segmented(
+        spark.createDataFrame(rows, sch), ["k"], [F.col("v").desc()], 2, segments=4
+    ).collect()
+    assert sorted(r["v"] for r in top) == ["payload_8", "payload_9"]
 
 
 def test_engine_dedupe_lww_tie_is_deterministic(spark):
