@@ -46,7 +46,7 @@ Layout::
       meta/v1.json  v2.json ...   # immutable commit records (delta or full)
       meta/v16.ckpt.json ...      # periodic full-state checkpoints (derived)
       meta/_latest                # pointer file, atomic-rename'd
-      data/c{version}-e{epoch}/bucket_p=<K>/part-*.parquet
+      data/c{version}-e{epoch}-{uuid6}/bucket_p=<K>/part-*.parquet
 
 **Metadata scales like the Delta log, not like a single document** (r05,
 VERDICT r04 #1): each commit record ``v{N}.json`` holds only that
@@ -472,6 +472,25 @@ def _delta_successor(m: Manifest, operation: str, **fields: Any) -> Manifest:
     return nm
 
 
+def align_to_schema(
+    df: DataFrame, schema: T.StructType, extra_cols: tuple[str, ...] = ()
+) -> DataFrame:
+    """Project ``df`` onto ``schema``: columns present are cast to the
+    target type (type-widen), absent ones land as typed nulls (column
+    add). ``extra_cols`` pass through unchanged (engine columns). This is
+    what lets an evolved table merge batches of ANY older generation and
+    vice versa — pure column expressions, no Python in the row path."""
+    cols = [
+        (
+            F.col(f.name).cast(f.dataType)
+            if f.name in df.columns
+            else F.lit(None).cast(f.dataType)
+        ).alias(f.name)
+        for f in schema.fields
+    ]
+    return df.select(*cols, *[F.col(c) for c in extra_cols if c in df.columns])
+
+
 class LakeTable:
     """A single lake table rooted at a directory. Single-writer."""
 
@@ -841,15 +860,7 @@ class LakeTable:
             df = spark.read.schema(stored_extra(ver)).parquet(*paths)
             if khash_in is not None:
                 df = df.where(F.col(KHASH_COL).isin([int(h) for h in khash_in]))
-            exprs = []
-            for fld in cur.fields:
-                if fld.name in df.columns:
-                    exprs.append(F.col(fld.name).cast(fld.dataType).alias(fld.name))
-                else:
-                    exprs.append(F.lit(None).cast(fld.dataType).alias(fld.name))
-            exprs.append(F.col(BUCKET_COL))
-            exprs.extend(F.col(f.name) for f in extra)
-            parts.append(df.select(*exprs))
+            parts.append(align_to_schema(df, cur, (BUCKET_COL, *(f.name for f in extra))))
         df = parts[0]
         for p in parts[1:]:
             df = df.unionByName(p)
@@ -1033,14 +1044,29 @@ class LakeTable:
 
     # --------------------------------------------------------------- write
     def _write_data(
-        self, df: DataFrame, commit_dir_name: str, m: Manifest, kind: str = "base"
+        self,
+        df: DataFrame,
+        commit_dir_name: str,
+        m: Manifest,
+        kind: str = "base",
+        buckets: "set[int] | None" = None,
+        schema_version: int | None = None,
     ) -> list[dict[str, Any]]:
-        """Write rows (must carry BUCKET_COL) under data/<commit_dir>/,
-        one directory per bucket, with ``m``'s key columns and write
-        properties; return manifest file entries with per-file row
-        counts and min/max key-hash stats (from the parquet footers the
-        rows-count pass already opens — free). ``kind="delta"`` marks
-        the entries as MoR delta files.
+        """The one data write of every commit: write rows (must carry
+        BUCKET_COL) under data/<commit_dir_name>-<uuid6>/, one directory
+        per bucket, with ``m``'s key columns and write properties; return
+        manifest file entries with per-file row counts and min/max
+        key-hash stats (from the parquet footers the rows-count pass
+        already opens — free). ``kind="delta"`` marks the entries as MoR
+        delta files.
+
+        Postconditions it owns: the uuid suffix keeps racing attempts
+        (two replayers of the same epoch, commit vs compact at the same
+        version) from colliding in one directory — a losing attempt's
+        directory is an orphan for vacuum; every entry is stamped with
+        ``schema_version`` (default ``m.current_schema_version``); and a
+        file of a bucket outside ``buckets`` (when given) raises
+        ``RuntimeError`` before any commit can reference it.
 
         Table property ``write.bloom`` decides which files also record a
         per-file Bloom filter over the key hashes (read back from the
@@ -1074,7 +1100,9 @@ class LakeTable:
         else:
             sort_cols = list(key_cols)
 
-        out = os.path.join(self._data_dir, commit_dir_name)
+        if schema_version is None:
+            schema_version = m.current_schema_version
+        out = os.path.join(self._data_dir, f"{commit_dir_name}-{uuid.uuid4().hex[:6]}")
         staged = (
             # range-partition on bucket: ~one reducer per bucket (hash
             # repartition collides buckets onto shared reducers, leaving
@@ -1104,6 +1132,11 @@ class LakeTable:
             if not d.startswith(f"{_WRITE_PARTITION_COL}="):
                 continue
             bucket = int(d.split("=", 1)[1])
+            if buckets is not None and bucket not in buckets:
+                raise RuntimeError(
+                    f"commit {commit_dir_name} wrote bucket {bucket} outside its "
+                    f"target set {sorted(buckets)}"
+                )
             bdir = os.path.join(out, d)
             for fn in sorted(os.listdir(bdir)):
                 if not fn.endswith(".parquet"):
@@ -1129,7 +1162,7 @@ class LakeTable:
                     "path": os.path.relpath(fpath, self.root),
                     "bucket": bucket,
                     "rows": rows,
-                    "schema_version": None,  # stamped by caller
+                    "schema_version": schema_version,
                     "khash_min": kmin,
                     "khash_max": kmax,
                 }
@@ -1217,43 +1250,74 @@ class LakeTable:
             with contextlib.suppress(OSError):
                 os.remove(p)
 
-    def _publish_epoch_with_rebase(
+    def _commit_epoch(
         self,
-        m: Manifest,
+        df: DataFrame,
+        changed_buckets: list[int],
         epoch_id: int,
         new_schema: T.StructType | None,
-        new_entries: list[dict[str, Any]],
-        replace_buckets: "set[int] | None",
-        operation: str,
+        base_version: int | None,
+        kind: str,
     ) -> int:
-        """The shared CAS/rebase publish loop of both epoch commit
-        flavors. ``replace_buckets`` names the buckets whose prior files
-        the commit replaces (CoW); ``None`` appends (MoR). Publishes an
-        O(commit)-sized delta record — the full file list exists only in
-        memory (and in periodic checkpoints)."""
-        while True:
-            cur_sv = m.current_schema_version
-            schema_add = None
-            if new_schema is not None and new_schema.jsonValue() != m.schema().jsonValue():
-                cur_sv += 1
-                schema_add = {str(cur_sv): new_schema.jsonValue()}
-            for e in new_entries:
-                e["schema_version"] = cur_sv
-            nm = _delta_successor(
-                m,
-                operation,
-                add=new_entries,
-                remove_buckets=None if replace_buckets is None else sorted(replace_buckets),
-                epoch=epoch_id,
-                schema_add=schema_add,
-                current_schema_version=cur_sv,
-            )
-            if self._publish(nm):
-                return nm.version
-            m2 = self._rebase_epoch(m.version, epoch_id)
-            if m2 is None:  # another replayer won this epoch: no-op
+        """The one epoch-commit body of both flavors: ``kind="base"``
+        replaces ``changed_buckets``' files (``commit_buckets``, CoW),
+        ``kind="delta"`` appends delta files (``commit_delta_buckets``,
+        MoR). Committed-epoch no-op, ``base_version`` rebase, one data
+        write, then the CAS/rebase publish loop of an O(commit)-sized
+        delta record — the full file list exists only in memory (and in
+        periodic checkpoints)."""
+        m = self.manifest()
+        if epoch_id in m.committed_epochs:
+            return m.version
+        if base_version is not None and m.version != base_version:
+            m2 = self._rebase_epoch(base_version, epoch_id)
+            if m2 is None:  # another replayer already committed it
                 return self.latest_version()
             m = m2
+        # decided once: a rebase only crosses compact/set_properties
+        # (_rebase_epoch), neither of which changes the schema
+        sv, schema_add = m.current_schema_version, None
+        if new_schema is not None and new_schema.jsonValue() != m.schema().jsonValue():
+            sv += 1
+            schema_add = {str(sv): new_schema.jsonValue()}
+        delta = kind == "delta"
+        changed = set(changed_buckets)
+        with self._inflight_guard():
+            entries: list[dict[str, Any]] = []
+            if changed:
+                if delta:
+                    # __order is stamped with the FIRST attempt's version;
+                    # if the CAS is lost to a compaction and the commit
+                    # rebases, the final version exceeds the stamp — still
+                    # sound, because the order invariants only need (a)
+                    # stamp > 0 (base rows read at 0; a compacted base of
+                    # this bucket folded only PRIOR deltas, which this
+                    # epoch logically supersedes), and (b) stamps strictly
+                    # increase across delta commits of a bucket —
+                    # guaranteed by the single-ingest-writer rule (the
+                    # next epoch's stamp is its snapshot version + 1 ≥
+                    # this commit's final version + 1 > this stamp).
+                    df = df.withColumn(MOR_ORDER_COL, F.lit(m.version + 1).cast("long"))
+                # data files are written ONCE, before the CAS loop
+                entries = self._write_data(
+                    df, f"{'d' if delta else 'c'}{m.version + 1}-e{epoch_id}", m, kind, changed, sv
+                )
+            while True:
+                nm = _delta_successor(
+                    m,
+                    "epoch-delta" if delta else "epoch",
+                    add=entries,
+                    remove_buckets=None if delta else sorted(changed),
+                    epoch=epoch_id,
+                    schema_add=schema_add,
+                    current_schema_version=sv,
+                )
+                if self._publish(nm):
+                    return nm.version
+                m2 = self._rebase_epoch(m.version, epoch_id)
+                if m2 is None:  # another replayer won this epoch: no-op
+                    return self.latest_version()
+                m = m2
 
     def commit_buckets(
         self,
@@ -1275,36 +1339,7 @@ class LakeTable:
         with ``ConcurrentCommitError``. Returns the new (or current)
         snapshot version.
         """
-        m = self.manifest()
-        if epoch_id in m.committed_epochs:
-            return m.version
-        if base_version is not None and m.version != base_version:
-            m2 = self._rebase_epoch(base_version, epoch_id)
-            if m2 is None:  # another replayer already committed it
-                return self.latest_version()
-            m = m2
-
-        changed = set(changed_buckets)
-        with self._inflight_guard():
-            new_entries: list[dict[str, Any]] = []
-            if changed:
-                # data files are written ONCE, before the CAS loop — the
-                # uuid suffix keeps racing attempts (two replayers of the
-                # same epoch, commit vs compact at the same version) from
-                # colliding in one directory; a losing attempt's
-                # directory is an orphan for vacuum
-                new_entries = self._write_data(
-                    df, f"c{m.version + 1}-e{epoch_id}-{uuid.uuid4().hex[:6]}", m
-                )
-                for e in new_entries:
-                    if e["bucket"] not in changed:
-                        raise RuntimeError(
-                            f"commit wrote bucket {e['bucket']} outside changed set "
-                            f"{sorted(changed)}"
-                        )
-            return self._publish_epoch_with_rebase(
-                m, epoch_id, new_schema, new_entries, changed, "epoch"
-            )
+        return self._commit_epoch(df, changed_buckets, epoch_id, new_schema, base_version, "base")
 
     def commit_delta_buckets(
         self,
@@ -1336,42 +1371,7 @@ class LakeTable:
         """
         if MOR_OP_COL not in df.columns:
             raise ValueError(f"delta commit requires the {MOR_OP_COL!r} column")
-        m = self.manifest()
-        if epoch_id in m.committed_epochs:
-            return m.version
-        if base_version is not None and m.version != base_version:
-            m2 = self._rebase_epoch(base_version, epoch_id)
-            if m2 is None:  # another replayer already committed it
-                return self.latest_version()
-            m = m2
-
-        changed = set(changed_buckets)
-        with self._inflight_guard():
-            new_entries: list[dict[str, Any]] = []
-            if changed:
-                # __order is stamped with the FIRST attempt's version; if
-                # the CAS is lost to a compaction and the commit rebases,
-                # the final version exceeds the stamp — still sound,
-                # because the order invariants only need (a) stamp > 0
-                # (base rows read at 0; a compacted base of this bucket
-                # folded only PRIOR deltas, which this epoch logically
-                # supersedes), and (b) stamps strictly increase across
-                # delta commits of a bucket — guaranteed by the
-                # single-ingest-writer rule (the next epoch's stamp is
-                # its snapshot version + 1 ≥ this commit's final
-                # version + 1 > this stamp).
-                stamped = df.withColumn(MOR_ORDER_COL, F.lit(m.version + 1).cast("long"))
-                new_entries = self._write_data(
-                    stamped, f"d{m.version + 1}-e{epoch_id}-{uuid.uuid4().hex[:6]}", m, "delta"
-                )
-                for e in new_entries:
-                    if e["bucket"] not in changed:
-                        raise RuntimeError(
-                            f"delta commit wrote bucket {e['bucket']} outside changed set"
-                        )
-            return self._publish_epoch_with_rebase(
-                m, epoch_id, new_schema, new_entries, None, "epoch-delta"
-            )
+        return self._commit_epoch(df, changed_buckets, epoch_id, new_schema, base_version, "delta")
 
     def overwrite(self, df: DataFrame, epoch_id: int) -> int:
         """Truncate-and-reload fast path (ETLBox UseTruncateMethod,
@@ -1621,26 +1621,16 @@ class LakeTable:
     ) -> "tuple[int, list[dict[str, Any]]] | None":
         """The shared bucket-rewrite commit core of ``compact`` and
         ``delete_where``: write ``df`` (the buckets' full replacement
-        content), stamp entries, replace those buckets' file lists in a
-        new manifest, publish. Returns (version, entries), or None when
-        the CAS is lost (caller recomputes from the new snapshot)."""
-        with self._inflight_guard():
-            entries = self._write_data(
-                df, f"{operation}-v{m.version + 1}-{uuid.uuid4().hex[:6]}", m
-            )
-            bset = set(buckets)
-            for e in entries:
-                e["schema_version"] = m.current_schema_version
-                if e["bucket"] not in bset:
-                    raise RuntimeError(
-                        f"{operation} rewrote bucket {e['bucket']} outside target set"
-                    )
-            nm = _delta_successor(
-                m, operation, add=entries, remove_buckets=sorted(bset), **(extra_record or {})
-            )
-            if self._publish(nm):
-                return nm.version, entries
-        return None
+        content), replace those buckets' file lists in a new manifest,
+        publish. Callers hold ``_inflight_guard`` across the read that
+        produced ``df``. Returns (version, entries), or None when the CAS
+        is lost (caller recomputes from the new snapshot)."""
+        bset = set(buckets)
+        entries = self._write_data(df, f"{operation}-v{m.version + 1}", m, buckets=bset)
+        nm = _delta_successor(
+            m, operation, add=entries, remove_buckets=sorted(bset), **(extra_record or {})
+        )
+        return (nm.version, entries) if self._publish(nm) else None
 
     def truncate(self, epoch_id: int) -> int:
         """TruncateTableTask analog: new empty snapshot. A lost CAS just
@@ -1783,18 +1773,7 @@ class LakeTable:
         sch = cur_m.schema()
         payload = [f.name for f in sch.fields if f.name not in keys]
         cur = self.read(spark, version=cur_m.version)
-        tgt = self.read(spark, version=tgt_version)
-        tgt_al = tgt.select(
-            *[
-                (
-                    F.col(f.name).cast(f.dataType)
-                    if f.name in tgt.columns
-                    else F.lit(None).cast(f.dataType)
-                ).alias(f.name)
-                for f in sch.fields
-            ],
-            F.col(BUCKET_COL),
-        )
+        tgt_al = align_to_schema(self.read(spark, version=tgt_version), sch, (BUCKET_COL,))
         c = cur.withColumn("__c", F.lit(True)).alias("c")
         g = tgt_al.withColumn("__g", F.lit(True)).alias("g")
         j = c.join(
@@ -2075,9 +2054,7 @@ class LakeTable:
         full-table rewrite, and against a live ingest stream it would
         lose again — a lost CAS raises ``ConcurrentCommitError`` (pause
         the writer and re-run)."""
-        entries = self._write_data(df, f"{operation}-v{m.version + 1}-{uuid.uuid4().hex[:6]}", m)
-        for e in entries:
-            e["schema_version"] = m.current_schema_version
+        entries = self._write_data(df, f"{operation}-v{m.version + 1}", m)
         nm = dataclass_replace(
             m,
             version=m.version + 1,
@@ -2166,13 +2143,15 @@ class LakeTable:
         before it, the latest at marker creation — is retained, so a
         commit's pinned classify snapshot can't be expired mid-read by
         fast metadata churn no matter how small ``keep_versions`` is.
-        Markers older than ``inflight_max_age_s`` are crashed
-        writers' leftovers: swept, so they can't block vacuum forever.
-        (3) a live ``_restore-intent.{v}.*`` marker (an in-flight
-        ``rollback`` or ``tag``) adds version ``v`` to the kept set — its
-        OLD files are what the rollback is about to re-reference, and no
-        mtime guard can protect old files. (4) ``tag.*`` properties on
-        the latest manifest pin their versions durably until untagged.
+        Markers of either kind (``_inflight.*``, ``_restore-intent.*``)
+        older than ``inflight_max_age_s`` are crashed writers' leftovers:
+        never live, and swept (unless ``dry_run``) so they can't block
+        vacuum forever. (3) a live ``_restore-intent.{v}.*`` marker (an
+        in-flight ``rollback`` or ``tag``) adds version ``v`` to the kept
+        set — its OLD files are what the rollback is about to
+        re-reference, and no mtime guard can protect old files. (4)
+        ``tag.*`` properties on the latest manifest pin their versions
+        durably until untagged.
 
         Readers pinned to an expired snapshot (e.g. a long job that
         called ``read(version=...)`` on a version outside the kept
@@ -2195,8 +2174,6 @@ class LakeTable:
         closing it — the unavoidable residue is detected by tag()/
         rollback()'s post-publish file re-check, which reverts/untags
         before raising."""
-        import time as _time
-
         if keep_versions < 1:
             # keep_versions=0 would compute an EMPTY keep set and delete
             # every record including the latest — one operator typo from
@@ -2204,50 +2181,15 @@ class LakeTable:
             raise ValueError(f"keep_versions must be >= 1, got {keep_versions}")
         latest = self.latest_version()
         keep = set(range(max(0, latest - keep_versions + 1), latest + 1))
-        # tags are durable pins: a tag.<name> property on the LATEST
-        # manifest retains its version (manifest + files) past the
-        # keep_versions window until untagged
-        for k, v in self.manifest(latest).properties.items():
-            if k.startswith("tag."):
-                with contextlib.suppress(TypeError, ValueError):
-                    keep.add(int(v))
+        keep |= self._pinned_versions(inflight_max_age_s, sweep=not dry_run)
         cutoff = (
             os.path.getmtime(os.path.join(self._meta_dir, f"v{latest}.json")) - grace_s
         )
-        now = _time.time()
-        live_marker_mtimes: list[float] = []
-        for fn in os.listdir(self._meta_dir):
-            # a live _restore-intent.{v}.{uuid} marker pins version v (a
-            # rollback is re-referencing its OLD files, which no mtime
-            # guard protects); stale markers age out like _inflight ones
-            if fn.startswith("_restore-intent."):
-                p = os.path.join(self._meta_dir, fn)
-                try:
-                    mt = os.path.getmtime(p)
-                except OSError:
-                    continue
-                if now - mt > inflight_max_age_s:
-                    if not dry_run:
-                        with contextlib.suppress(OSError):
-                            os.remove(p)
-                    continue
-                with contextlib.suppress(ValueError, IndexError):
-                    keep.add(int(fn.split(".")[1]))
-                continue
-            if not fn.startswith("_inflight."):
-                continue
-            p = os.path.join(self._meta_dir, fn)
-            try:
-                mt = os.path.getmtime(p)
-            except OSError:
-                continue  # marker removed between listdir and stat
-            if now - mt > inflight_max_age_s:
-                if not dry_run:
-                    with contextlib.suppress(OSError):
-                        os.remove(p)
-                continue
-            cutoff = min(cutoff, mt)
-            live_marker_mtimes.append(mt)
+        live_marker_mtimes = [
+            mt for _, mt in self._live_markers("_inflight.", inflight_max_age_s, not dry_run)
+        ]
+        if live_marker_mtimes:
+            cutoff = min(cutoff, min(live_marker_mtimes))
         # live in-flight markers pin the SNAPSHOT WINDOW they started
         # under (r05, found by the multi-writer soak): a commit's
         # read-classify-commit span holds a marker for its whole
@@ -2298,7 +2240,7 @@ class LakeTable:
         # tag property landed AFTER the scans above would otherwise lose
         # its target's files to this very walk — re-list both now, as
         # close to the deletion as possible
-        for v in sorted(self._pinned_versions_now() - keep):
+        for v in sorted(self._pinned_versions(inflight_max_age_s) - keep):
             if v > latest:
                 continue
             try:
@@ -2385,17 +2327,46 @@ class LakeTable:
                     stats["manifests_deleted"] += 1
         return stats
 
-    def _pinned_versions_now(self) -> "set[int]":
-        """Versions pinned RIGHT NOW by live ``_restore-intent`` markers
-        and by ``tag.*`` properties of the current latest manifest — the
-        late re-scan vacuum runs just before its deletion walk."""
-        pins: set[int] = set()
+    def _live_markers(
+        self, prefix: str, max_age_s: float, sweep: bool
+    ) -> "list[tuple[str, float]]":
+        """(name, mtime) of the live ``prefix`` markers in the meta dir.
+        A marker older than ``max_age_s`` is a crashed writer's leftover:
+        never live, and removed when ``sweep`` (not on a dry run)."""
+        import time as _time
+
+        now = _time.time()
+        live = []
         with contextlib.suppress(OSError):
             for fn in os.listdir(self._meta_dir):
-                if fn.startswith("_restore-intent."):
-                    with contextlib.suppress(ValueError, IndexError):
-                        pins.add(int(fn.split(".")[1]))
-        with contextlib.suppress(OSError, FileNotFoundError):
+                if not fn.startswith(prefix):
+                    continue
+                p = os.path.join(self._meta_dir, fn)
+                try:
+                    mt = os.path.getmtime(p)
+                except OSError:
+                    continue  # marker removed between listdir and stat
+                if now - mt > max_age_s:
+                    if sweep:
+                        with contextlib.suppress(OSError):
+                            os.remove(p)
+                    continue
+                live.append((fn, mt))
+        return live
+
+    def _pinned_versions(self, max_age_s: float, sweep: bool = False) -> "set[int]":
+        """Versions pinned RIGHT NOW: a live ``_restore-intent.{v}.*``
+        marker (an in-flight ``rollback`` or ``tag``) pins ``v``, and a
+        ``tag.*`` property of the current latest manifest pins its
+        version durably until untagged. Vacuum's first scan and its late
+        re-scan just before the deletion walk both ask here, so a dry run
+        and a real run keep the same versions; ``sweep`` (the first scan
+        of a real run) also removes aged-out intent markers."""
+        pins: set[int] = set()
+        for fn, _ in self._live_markers("_restore-intent.", max_age_s, sweep):
+            with contextlib.suppress(ValueError, IndexError):
+                pins.add(int(fn.split(".")[1]))
+        with contextlib.suppress(OSError):
             for k, v in self.manifest(self.latest_version()).properties.items():
                 if k.startswith("tag."):
                     with contextlib.suppress(TypeError, ValueError):

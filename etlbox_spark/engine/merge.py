@@ -45,7 +45,7 @@ from pyspark.sql import types as T
 
 from ..functions.hashing import bucket_expr
 from ..operators.dedupe import dedupe_lww as _dedupe_lww
-from .lake import BUCKET_COL, MOR_OP_COL, STALE_ATTEMPT_S, LakeTable
+from .lake import BUCKET_COL, MOR_OP_COL, STALE_ATTEMPT_S, LakeTable, align_to_schema
 from .spec import ChangeAction, MergeMode, MergeSpec
 
 ACTION_COL = "action"
@@ -222,9 +222,10 @@ def _merge_change_schemas(a: T.StructType, b: T.StructType) -> T.StructType:
 # spark.read probe of the same dir would return.
 _SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 # above this many dirs the footer probe fans out as one Spark job — the
-# measured crossover (tools/bench_log_tail.py): the driver loop runs at
-# ~0.19 ms/dir (1.5 s at 8k dirs) while the distributed probe is a flat
-# ~2.5-3 s job at any size, so fan-out only wins past ~16k dirs
+# measured crossover (BENCH_LOG_TAIL.json; script retired after d21bc57):
+# the driver loop runs at ~0.19 ms/dir (1.5 s at 8k dirs) while the
+# distributed probe is a flat ~2.5-3 s job at any size, so fan-out only
+# wins past ~16k dirs
 _PROBE_DISTRIBUTE_THRESHOLD = 16384
 
 
@@ -378,8 +379,8 @@ def read_changes(
     (~0.2 ms driver-side, no Spark job — see ``_probe_dir_schemas``),
     and past ~16k epochs the probe itself runs as one distributed job,
     so even a full-history replay of a 10^5-epoch log plans in seconds
-    (tools/bench_log_tail.py: 624 s of legacy planning → 1.5 s at 8k
-    epochs).
+    (BENCH_LOG_TAIL.json, script retired after d21bc57: 624 s of
+    legacy planning → 1.5 s at 8k epochs).
 
     A caught-up consumer is the steady state, not an error: when the log
     HAS committed epochs but none fall in the requested range (e.g.
@@ -610,25 +611,6 @@ def evolve_schema(
     return T.StructType(out) if changed else None
 
 
-def align_to_schema(
-    df: DataFrame, schema: T.StructType, extra_cols: tuple[str, ...] = ()
-) -> DataFrame:
-    """Project ``df`` onto ``schema``: columns present are cast to the
-    target type (type-widen), absent ones land as typed nulls (column
-    add). ``extra_cols`` pass through unchanged (engine columns). This is
-    what lets an evolved table merge batches of ANY older generation and
-    vice versa — pure column expressions, no Python in the row path."""
-    cols = [
-        (
-            F.col(f.name).cast(f.dataType)
-            if f.name in df.columns
-            else F.lit(None).cast(f.dataType)
-        ).alias(f.name)
-        for f in schema.fields
-    ]
-    return df.select(*cols, *[F.col(c) for c in extra_cols if c in df.columns])
-
-
 def classify(
     snapshot: DataFrame,
     batch: DataFrame,
@@ -855,7 +837,14 @@ def _apply_epoch_pinned(
     # external consumers but is no longer required for correctness.
     delta = j.where(F.col(ACTION_COL).isNotNull()).drop("__keep")
     if delta_dir is not None:
-        delta = spark.read.parquet(_stage_epoch_log(delta, delta_dir, epoch_id))
+        tmp = _stage_epoch_log(delta, delta_dir, epoch_id)
+        # the staged part files, not the dir: Spark's listing treats the
+        # underscore-prefixed in-flight dir as hidden and warns "All paths
+        # were ignored" when handed it (an empty delta still stages one
+        # schema-only part file)
+        delta = spark.read.parquet(
+            *[os.path.join(tmp, f) for f in sorted(os.listdir(tmp)) if f.endswith(".parquet")]
+        )
     counts: dict[str, int] = {}
     if spec.on_malformed == "quarantine":
         counts["quarantine"] = n_quarantined

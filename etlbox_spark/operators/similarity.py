@@ -235,7 +235,7 @@ def _ivf_lake_append_pinned(spark, table, df, epoch_id, id_col):
     # guard), so a batch arriving with e.g. an int id would probe the
     # wrong hashes, silently skip the cross-bucket tombstone, and write
     # physically narrower parquet than _read_aligned's declared schema
-    from ..engine.merge import align_to_schema
+    from ..engine.lake import align_to_schema
 
     df = align_to_schema(df, m.schema())
     dup = (

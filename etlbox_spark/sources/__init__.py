@@ -138,7 +138,10 @@ def to_xml_rows(df: DataFrame, row_tag: str = "row", out_col: str = "xml") -> Da
     literally by to_xml, so it is re-escaped as the ``&#10;``/``&#13;``
     character reference, which any XML parser (incl. ``from_xml``)
     decodes back — the old blanket ``\\s*\\n\\s*`` collapse silently
-    corrupted newline-bearing values ("a\\nb" → "ab")."""
+    corrupted newline-bearing values ("a\\nb" → "ab"). A whitespace-only
+    value such as "\\n" is collapsed too, which loses nothing the parser
+    keeps: ``xml_rows`` reads any whitespace-only value ("  " as well)
+    back as ``''``."""
     from pyspark.sql import functions as F
 
     xml = F.to_xml(F.struct(*[F.col(c) for c in df.columns]), {"rowTag": row_tag})

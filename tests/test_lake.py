@@ -209,6 +209,24 @@ def test_create_heals_hard_crashed_create(spark, tmp_path):
     # test_create_refuses_stale_meta_after_drop)
 
 
+def test_epoch_commit_rejects_rows_outside_changed_buckets(spark, tmp_path):
+    """Both epoch commit flavors refuse rows of a bucket they were not
+    told they change (a CoW commit would otherwise leave that bucket's
+    old file live next to the new one) and publish nothing."""
+    from etlbox_spark.engine.lake import MOR_OP_COL
+
+    t = _mk(tmp_path)
+    df = _rows_df(spark, [("r0", "p1", "c1", "py", "A")])
+    (b,) = [r[0] for r in df.select(BUCKET_COL).distinct().collect()]
+    other = [(b + 1) % 8]
+    v = t.latest_version()
+    with pytest.raises(RuntimeError, match="outside"):
+        t.commit_buckets(df, other, epoch_id=0)
+    with pytest.raises(RuntimeError, match="outside"):
+        t.commit_delta_buckets(df.withColumn(MOR_OP_COL, F.lit("upsert")), other, epoch_id=0)
+    assert t.latest_version() == v and not t.is_committed(0)
+
+
 def test_vacuum_spares_in_flight_commit_files(spark, tmp_path):
     """ADVICE r01: files written after the latest manifest (an in-flight
     commit between _write_data and _publish) must survive vacuum."""

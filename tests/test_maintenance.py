@@ -312,7 +312,8 @@ def test_delete_where_conflicts_with_concurrent_epoch(spark, tmp_path):
 def test_vacuum_dry_run_reports_without_touching(spark, tmp_path):
     """VACUUM DRY RUN analog: identical counts, zero side effects — every
     file, manifest and marker survives; the subsequent real vacuum
-    deletes exactly what the dry run reported."""
+    deletes exactly what the dry run reported. A stale restore intent
+    pins nothing in either run (the real run sweeps it)."""
     import time
 
     t = LakeTable.create(str(tmp_path / "t"), REPO_FILES_SCHEMA, ["repo", "path"], 2)
@@ -322,6 +323,9 @@ def test_vacuum_dry_run_reports_without_touching(spark, tmp_path):
     stale = os.path.join(t._meta_dir, "_inflight.deadbeef")
     open(stale, "w").close()
     os.utime(stale, (time.time() - 999, time.time() - 999))
+    stale_intent = os.path.join(t._meta_dir, "_restore-intent.1.deadbeef")
+    open(stale_intent, "w").close()
+    os.utime(stale_intent, (time.time() - 999, time.time() - 999))
 
     def snapshot():
         return sorted(
@@ -337,7 +341,7 @@ def test_vacuum_dry_run_reports_without_touching(spark, tmp_path):
     assert snapshot() == before  # nothing touched, marker included
     real = t.vacuum(keep_versions=1, inflight_max_age_s=100)
     assert real == dry  # the dry run's report was exact
-    assert not os.path.exists(stale)
+    assert not os.path.exists(stale) and not os.path.exists(stale_intent)
 
 
 def test_vacuum_keeps_time_travel_window(spark, tmp_path):
