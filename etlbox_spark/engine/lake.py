@@ -975,7 +975,8 @@ class LakeTable:
         # tombstone in the old bucket + upsert in the new one) the upsert
         # deterministically outranks the tombstone. CDC epochs write at
         # most one row per key per commit, so this tie-break is inert
-        # there.
+        # there. lookup.probe_merge applies this same rule to the probes
+        # it serves on the driver; change the two together.
         order = F.struct(
             F.col(MOR_ORDER_COL),
             (F.col(MOR_OP_COL) != "delete").cast("int").alias("__op_rank"),
@@ -1000,20 +1001,34 @@ class LakeTable:
 
     def lookup_keys(self, spark: SparkSession, keys: list[tuple]) -> DataFrame:
         """Point lookup: current rows for exactly ``keys`` (tuples in
-        ``key_cols`` order), scanning only the files that can hold them.
+        ``key_cols`` order), scanning only the files that can hold them;
+        the columns and types of ``read()`` with ``bucket``.
 
         Pruning is three-level: bucket (manifest partition pruning), then
         per-file min/max key-hash (footer stats recorded at write time),
         then per-file Bloom membership (delta files record one at commit;
         min/max ranges of multi-key delta files overlap almost totally,
-        so the bloom is what actually skips a MoR backlog's files) — a
-        point probe reads the bucket's base plus only the delta files
-        that can hold the key instead of merging them all. The probe
-        hashes are computed by Spark itself (one row per key — bounded
-        metadata, identical xxhash64 to the write path by construction,
-        keys cast to the table's key types first), then the surviving
-        files are read and semi-joined back to the probe set so the MoR
-        caveat in ``read()`` never leaks spurious keys to the caller.
+        so the bloom is what actually skips a MoR backlog's files). The
+        probe hashes and buckets are computed by Spark itself over an
+        Arrow-built local relation of the keys cast to the table's key
+        types (0 jobs; identical xxhash64 to the write path by
+        construction). A key with a NULL component matches nothing.
+
+        Two paths serve the pruned files (``engine/lookup.py``):
+
+        * **driver** — when the pruned files hold at most
+          ``lookup.DRIVER_MAX_ROWS`` rows by their manifest counts,
+          pyarrow reads them with the ``__khash IN (...)`` filter, one
+          Arrow kernel applies ``read()``'s merge-on-read rule and the
+          probe-key filter, and the rows come back as a local relation:
+          no Spark job;
+        * **Spark** — above the gate, or when a pruned file was written
+          under an older schema version, a key column is float, double or
+          timestamp, or a column's type is not one whose Arrow round trip
+          is exact (``lookup._arrow_exact``: no map, struct or array of
+          timestamps): ``read(key_hashes=...)`` semi-joined back to the
+          probe keys, so the MoR caveat in ``read()`` never leaks
+          spurious keys to the caller.
         """
         m = self.manifest()
         if m.properties.get("bucketing", "khash") != "khash":
@@ -1025,22 +1040,30 @@ class LakeTable:
                 f"bucketing={m.properties['bucketing']!r} (buckets are not "
                 "derivable from keys — read with explicit buckets instead)"
             )
-        from ..functions.hashing import bucket_expr, key_hash
+        from .lookup import serve_probe
 
-        kfields = [f for f in m.schema().fields if f.name in m.key_cols]
-        ktype = T.StructType(sorted(kfields, key=lambda f: m.key_cols.index(f.name)))
-        probe = spark.createDataFrame(keys, ktype)
+        probe, hb = self._probe_keys(spark, m, keys)
+        return serve_probe(self, spark, m, probe, hb)
+
+    @staticmethod
+    def _probe_keys(spark: SparkSession, m: Manifest, keys: list[tuple]) -> tuple[DataFrame, list]:
+        """The probe: ``keys`` as a local relation cast to the key types
+        (nullable), and one collected row per probe key with the cast key
+        columns, ``__h`` (the write path's ``key_hash``) and ``__b``
+        (``bucket_expr``). Spark folds the projection on the driver: no
+        job."""
+        from ..functions.hashing import bucket_expr, key_hash
+        from .lookup import probe_table
+
+        cur = m.schema()
+        ktype = T.StructType([T.StructField(c, cur[c].dataType, True) for c in m.key_cols])
+        probe = spark.createDataFrame(probe_table(ktype, keys), ktype)
         hb = probe.select(
-            key_hash(*m.key_cols).alias("h"), bucket_expr(m.n_buckets, *m.key_cols).alias("b")
+            *m.key_cols,
+            key_hash(*m.key_cols).alias("__h"),
+            bucket_expr(m.n_buckets, *m.key_cols).alias("__b"),
         ).collect()
-        hashes = sorted({int(r["h"]) for r in hb})
-        bks = sorted({int(r["b"]) for r in hb})
-        # pin the snapshot the hashes/buckets were derived from (ADVICE
-        # r03): re-resolving _latest inside read() would race a concurrent
-        # commit/rebucket — bucket ids computed under the old n_buckets
-        # would prune the wrong files of the new snapshot
-        df = self.read(spark, buckets=bks, key_hashes=hashes, version=m.version)
-        return df.join(F.broadcast(probe), on=list(m.key_cols), how="left_semi")
+        return probe, hb
 
     # --------------------------------------------------------------- write
     def _write_data(

@@ -4,8 +4,11 @@ bucket pruning, schema evolution read alignment (SURVEY.md §7 M0)."""
 from __future__ import annotations
 
 import os
+from collections import Counter
 
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -315,6 +318,280 @@ def test_manifest_khash_stats_and_point_lookup_pruning(spark, tmp_path):
     # one-element isin compiles to EqualTo; multi-element to In
     assert "PushedFilters: [IsNotNull(__khash), " in plan
     assert f"EqualTo(__khash,{h})" in plan or "In(__khash" in plan
+
+
+# --- point lookups served on the driver (engine/lookup.py)
+_LK_SCHEMA = T.StructType([
+    T.StructField("g", T.StringType(), True),
+    T.StructField("k", T.LongType(), True),
+    T.StructField("v", T.LongType(), True),
+    T.StructField("ts", T.TimestampType(), True),
+    T.StructField("d", T.DecimalType(20, 4), True),
+])
+_LK_NOTE = T.StructField("note", T.StringType(), True)
+# ("b", None) is a stored key with a NULL component: it must never match
+_LK_KEYS = [("a", 2**60 + 1), ("a", 7), ("b", 2**60 + 1), ("b", -3), ("b", None)]
+_LK_ABSENT = [("c", 1), ("a", 2**60 + 2)]
+
+
+
+def test_probe_hashes_match_the_stored_khash_and_bucket(spark, tmp_path):
+    """The probe's hash and bucket equal the ``__khash`` and ``bucket``
+    that ``_write_data`` stored for the same key. A pandas-built probe
+    fails the long table (``2**60 + 1`` beside a ``None`` becomes float64
+    and reads back as ``2**60``); a multi-row ``VALUES`` probe with
+    positional markers fails the string table (its markers bind out of
+    order)."""
+    import pyarrow.parquet as pq_  # noqa: N813
+
+    long_schema = T.StructType(
+        [T.StructField("k", T.LongType(), True), T.StructField("s", T.StringType(), True)]
+    )
+    cases = [
+        (REPO_FILES_SCHEMA, ["repo", "path"], [
+            ("repo_0001", "a/b.py", "c", "py", "x"),
+            ("repo_0002", "c/d.py", "c", "py", "y"),
+            ("repo_0003", "e.py", "c", "py", "z"),
+        ]),
+        (long_schema, ["k"], [(2**60 + 1, "x"), (None, "y")]),
+    ]
+    for i, (schema, key_cols, rows) in enumerate(cases):
+        t = LakeTable.create(str(tmp_path / f"t{i}"), schema, key_cols, 8)
+        df = spark.createDataFrame(rows, schema).withColumn(BUCKET_COL, bucket_expr(8, *key_cols))
+        t.commit_buckets(df, list(range(8)), epoch_id=0)
+        stored = {}
+        for e in t.manifest().files:
+            got = pq_.read_table(os.path.join(t.root, e["path"]), columns=[*key_cols, "__khash", BUCKET_COL])
+            for r in got.to_pylist():
+                stored[tuple(r[c] for c in key_cols)] = (r["__khash"], r[BUCKET_COL])
+        keys = [tuple(r[:len(key_cols)]) for r in rows]
+        _, hb = LakeTable._probe_keys(spark, t.manifest(), keys)
+        assert [tuple(r[c] for c in key_cols) for r in hb] == keys
+        assert {tuple(r[c] for c in key_cols): (r["__h"], r["__b"]) for r in hb} == stored
+
+
+def test_driver_lookup_keeps_rows_after_a_file_with_no_match(spark, tmp_path, monkeypatch):
+    """The middle of three pruned files passes the min/max key-hash range
+    (base files carry no Bloom filter by default) yet holds no row of the
+    probe, so its filtered scan is an empty Arrow batch between batches
+    that match. ``createDataFrame`` drops every row after such a batch
+    unless it gets one chunk: every matching row must come back."""
+    from etlbox_spark.engine import lookup
+
+    t = LakeTable.create(str(tmp_path / "eb"), _LK_SCHEMA, ["g", "k"], 4)
+    rows = [("a", i, i, None, None) for i in range(64)]
+    df = spark.createDataFrame(rows, _LK_SCHEMA).withColumn(BUCKET_COL, bucket_expr(4, "g", "k"))
+    t.commit_buckets(df, [0, 1, 2, 3], epoch_id=0)
+    m = t.manifest()
+    files = sorted(m.files, key=lambda e: e["bucket"])
+    assert [e["bucket"] for e in files] == [0, 1, 2, 3]
+    owners = {r[BUCKET_COL]: (r.g, r.k) for r in t.read(spark).collect()}
+    _, hb = LakeTable._probe_keys(spark, m, [("z", j) for j in range(64)])
+    absent = next(
+        (r["g"], r["k"]) for r in hb
+        if r["__b"] in (1, 2) and files[r["__b"]]["khash_min"] <= r["__h"] <= files[r["__b"]]["khash_max"]
+    )
+    scans = []
+    real = lookup.probe_merge
+    monkeypatch.setattr(lookup, "probe_merge", lambda clean, *a: scans.append(clean) or real(clean, *a))
+    got = {(r.g, r.k) for r in t.lookup_keys(spark, [owners[0], absent, owners[3]]).collect()}
+    assert [b.num_rows for b in scans[0].to_batches()] == [1, 0, 1]
+    assert got == {owners[0], owners[3]}
+
+
+def _lk_rows(spark, schema, step, ops, with_op=True):
+    """One commit's rows: key index → 'upsert' | 'delete'. Payloads are
+    seeded by (step, key): a long above 2**53 or NULL, a microsecond
+    timestamp, a 4-place decimal, and the evolved ``note`` when present."""
+    import datetime as dt
+    from decimal import Decimal
+
+    rows = []
+    for i, op in sorted(ops.items()):
+        g, k = _LK_KEYS[i]
+        if op == "delete":
+            payload = [None] * (len(schema.fields) - 2)
+        else:
+            payload = [
+                None if (step + i) % 3 == 0 else 2**53 + 1 + 7 * step + i,
+                dt.datetime(2021, 1, 1) + dt.timedelta(seconds=step, microseconds=7 * i + 1),
+                Decimal(f"{10 * step + i}.{i:04d}"),
+            ]
+            if len(schema.fields) > 5:
+                payload.append(f"n{step}")
+        rows.append((g, k, *payload) + ((op,) if with_op else ()))
+    fields = list(schema.fields) + ([T.StructField("__op", T.StringType())] if with_op else [])
+    df = spark.createDataFrame(rows, T.StructType(fields))
+    return df.withColumn(BUCKET_COL, bucket_expr(2, "g", "k"))
+
+
+_lk_step = st.one_of(
+    st.tuples(
+        st.just("write"),
+        st.dictionaries(st.integers(0, len(_LK_KEYS) - 1), st.sampled_from(["upsert", "delete"]), min_size=1),
+    ),
+    st.just(("compact", None)),
+)
+
+
+@settings(
+    max_examples=4,
+    deadline=None,
+    derandomize=True,
+    suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
+)
+@given(
+    steps=st.lists(_lk_step, min_size=1, max_size=3),
+    evolve_at=st.integers(0, 3),
+    picks=st.lists(st.integers(0, len(_LK_KEYS) - 1), max_size=4),
+)
+def test_driver_lookup_equals_read_semi_join(spark, tmp_path_factory, monkeypatch, steps, evolve_at, picks):
+    """Random MoR histories — upserts, tombstones, re-inserts after a
+    tombstone, compactions and one schema evolution — probed with absent,
+    duplicate and NULL-component keys and the empty list: with the row
+    gate forced open the driver path, and forced shut the Spark path,
+    each equal ``read()`` plus a left-semi join row for row. A probe that
+    prunes to a file of an older schema version takes the Spark path."""
+    from etlbox_spark.engine import lookup
+
+    tmp = tmp_path_factory.mktemp("lk")
+    t = LakeTable.create(str(tmp / "t"), _LK_SCHEMA, ["g", "k"], 2)
+    schema = _LK_SCHEMA
+    t.commit_buckets(
+        _lk_rows(spark, schema, 0, dict.fromkeys(range(len(_LK_KEYS)), "upsert"), with_op=False),
+        [0, 1], epoch_id=0,
+    )
+    ktype = T.StructType([T.StructField("g", T.StringType()), T.StructField("k", T.LongType())])
+    calls = []
+    real = lookup._read_on_driver
+    monkeypatch.setattr(lookup, "_read_on_driver", lambda *a: calls.append(1) or real(*a))
+
+    every = list(_LK_KEYS) + _LK_ABSENT + [("a", None), (None, 7)]
+    every += every[:2]
+
+    def check(keys):
+        want = t.read(spark).join(spark.createDataFrame(keys, ktype), on=["g", "k"], how="left_semi")
+        want_rows = Counter(tuple(r) for r in want.collect())
+        m = t.manifest()
+        old = {e["schema_version"] for e in m.files} != {m.current_schema_version}
+        for gate in (10**12, -1):
+            monkeypatch.setattr(lookup, "DRIVER_MAX_ROWS", gate)
+            calls.clear()
+            got = t.lookup_keys(spark, keys)
+            assert [(f.name, f.dataType) for f in got.schema] == [(f.name, f.dataType) for f in want.schema]
+            assert Counter(tuple(r) for r in got.collect()) == want_rows, (gate, keys)
+            if gate < 0 or (old and keys == every):
+                # every file holds a probed key, so an old-version file
+                # is among the pruned ones
+                assert not calls
+            elif not old:
+                assert calls
+
+    # one schema evolution that tombstones key 3, re-inserted at the end
+    plan = [*steps, ("write", {3: "upsert"})]
+    plan.insert(min(evolve_at, len(steps)), ("evolve", {0: "upsert", 3: "delete"}))
+    for step, (kind, ops) in enumerate(plan, start=1):
+        if kind == "compact":
+            t.compact(spark)
+        else:
+            new_schema = None
+            if kind == "evolve":
+                schema = new_schema = T.StructType([*_LK_SCHEMA.fields, _LK_NOTE])
+            df = _lk_rows(spark, schema, step, ops)
+            buckets = sorted({r[0] for r in df.select(BUCKET_COL).distinct().collect()})
+            t.commit_delta_buckets(df, buckets, epoch_id=step, new_schema=new_schema)
+        check(every)
+    check([_LK_KEYS[i] for i in picks])
+    check([])
+
+
+def _row_counts(df):
+    return Counter(tuple(tuple(v) if isinstance(v, list) else v for v in r) for r in df.collect())
+
+
+def test_driver_lookup_round_trips_column_types(spark, tmp_path, monkeypatch):
+    """Every column type the driver path admits, keys of int, date and
+    binary included, comes back from it exactly as ``read()`` plus the
+    semi-join returns it, over a base file and a MoR delta. A double key
+    column, a map column and a struct column take the Spark path."""
+    import datetime as dt
+    from decimal import Decimal
+
+    from etlbox_spark.engine import lookup
+
+    calls = []
+    real = lookup._read_on_driver
+    monkeypatch.setattr(lookup, "_read_on_driver", lambda *a: calls.append(1) or real(*a))
+    monkeypatch.setattr(lookup, "DRIVER_MAX_ROWS", 10**12)
+
+    def check(t, keys, driver):
+        names = t.manifest().key_cols
+        kfields = [f for f in t.manifest().schema().fields if f.name in names]
+        probe = spark.createDataFrame(keys, T.StructType(kfields))
+        want = t.read(spark).join(probe, on=names, how="left_semi")
+        calls.clear()
+        got = t.lookup_keys(spark, keys)
+        assert bool(calls) == driver
+        assert [(f.name, f.dataType) for f in got.schema] == [(f.name, f.dataType) for f in want.schema]
+        assert _row_counts(got) == _row_counts(want)
+
+    schema = T.StructType([
+        T.StructField("k", T.IntegerType(), True),
+        T.StructField("dk", T.DateType(), True),
+        T.StructField("kb", T.BinaryType(), True),
+        T.StructField("s", T.StringType(), True),
+        T.StructField("bo", T.BooleanType(), True),
+        T.StructField("by", T.ByteType(), True),
+        T.StructField("sh", T.ShortType(), True),
+        T.StructField("f", T.FloatType(), True),
+        T.StructField("d", T.DoubleType(), True),
+        T.StructField("dc", T.DecimalType(38, 10), True),
+        T.StructField("ts", T.TimestampType(), True),
+        T.StructField("ntz", T.TimestampNTZType(), True),
+        T.StructField("al", T.ArrayType(T.LongType()), True),
+        T.StructField("astr", T.ArrayType(T.StringType()), True),
+    ])
+
+    def row(i, step):
+        key = (i, dt.date(2020, 1, 1) + dt.timedelta(days=i), bytes([i, 0, 255]))
+        if i == 5:
+            return (*key, *[None] * (len(schema.fields) - 3))
+        return (*key, f"s{i}.{step}", i % 2 == 0, i - 3, 1000 * i + step, 1.5 * i, 2.0**-i + step,
+                Decimal(f"{10**20 + i}.{step:010d}"), dt.datetime(1650 + 700 * step, 1, 1, 0, 0, i, 7 * i),
+                dt.datetime(2262 + step, 4, 11, 23, 47, 16, i), [2**60 + i, None], ["x", None, f"{step}"])
+
+    t = LakeTable.create(str(tmp_path / "types"), schema, ["k", "dk", "kb"], 2)
+    base = spark.createDataFrame([row(i, 0) for i in range(6)], schema)
+    t.commit_buckets(base.withColumn(BUCKET_COL, bucket_expr(2, "k", "dk", "kb")), [0, 1], epoch_id=0)
+    delta = spark.createDataFrame(
+        [(*row(i, 1), op) for i, op in ((1, "upsert"), (2, "delete"), (7, "upsert"))],
+        T.StructType([*schema.fields, T.StructField("__op", T.StringType())]),
+    ).withColumn(BUCKET_COL, bucket_expr(2, "k", "dk", "kb"))
+    t.commit_delta_buckets(delta, sorted({r[0] for r in delta.select(BUCKET_COL).collect()}), epoch_id=1)
+    keys = [row(i, 0)[:3] for i in range(9)] + [(1, None, b"\x01\x00\xff")]
+    check(t, keys, driver=True)
+
+    for name, ktype, vtype in [
+        ("double-key", T.DoubleType(), T.LongType()),
+        ("map", T.LongType(), T.MapType(T.StringType(), T.LongType())),
+        ("struct", T.LongType(), T.StructType([T.StructField("a", T.LongType())])),
+    ]:
+        s2 = T.StructType([T.StructField("k", ktype), T.StructField("v", vtype)])
+        t2 = LakeTable.create(str(tmp_path / name), s2, ["k"], 2)
+        df = spark.range(4).select(F.col("id").cast(ktype).alias("k"), F.lit(None).cast(vtype).alias("v"))
+        t2.commit_buckets(df.withColumn(BUCKET_COL, bucket_expr(2, "k")), [0, 1], epoch_id=0)
+        probe = [(1.0,), (3.0,)] if name == "double-key" else [(1,), (3,)]
+        calls.clear()
+        assert t2.lookup_keys(spark, probe).count() == 2
+        assert not calls, name
+
+
+def test_lookup_keys_requires_khash_bucketing(tmp_path, spark):
+    t = LakeTable.create(
+        str(tmp_path / "c"), REPO_FILES_SCHEMA, ["repo", "path"], 2, properties={"bucketing": "custom"}
+    )
+    with pytest.raises(ValueError, match="bucketing"):
+        t.lookup_keys(spark, [("r0", "p0")])
 
 
 def test_sorted_within_bucket_makes_rowgroup_stats_selective(spark, tmp_path):

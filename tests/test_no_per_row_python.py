@@ -33,12 +33,16 @@ def test_collect_only_in_sanctioned_places():
     lists, centroids, per-partition counts, test sinks) — flag any new
     usage for review. joins.py: global_positions collects ≤ one row per
     partition (the zipWithIndex offset table). lake.py: lookup_keys
-    collects one (hash, bucket) row per PROBE key — caller-bounded
-    metadata, never table rows. textdedup.py: dedup_incremental collects
-    the nominated candidate CORPUS IDS to drive the pruned lookup_keys
-    point read — HARD-capped at nomination_limit via limit(n+1) (r05):
-    past the cap the fetch switches to a distributed semi-join, so the
-    collect is never O(corpus) even for an adversarial batch. fsck.py:
+    collects one (key, hash, bucket) row per PROBE key from a local
+    relation (LakeTable._probe_keys) — caller-bounded metadata, never
+    table rows; the table rows a probe reads on the driver
+    (engine/lookup.py, pyarrow, no collect) are bounded by the row gate
+    lookup.DRIVER_MAX_ROWS on the pruned files' manifest counts.
+    textdedup.py: dedup_incremental collects the nominated candidate
+    CORPUS IDS to drive the pruned lookup_keys point read — HARD-capped
+    at nomination_limit via limit(n+1) (r05): past the cap the fetch
+    switches to a distributed semi-join, so the collect is never
+    O(corpus) even for an adversarial batch. fsck.py:
     the distributed deep scan collects only error tuples + one counter
     row per partition — O(corruption findings), never O(files).
     merge.py: _probe_dirs_distributed collects one (index, schema-json)
