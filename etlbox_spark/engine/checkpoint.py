@@ -21,9 +21,9 @@ sliding window of the most recent ``KEEP_RECENT`` epochs' full lineage
 Crash-safety: the journal line lands before the state replace. A crash
 between the two re-applies the epoch on resume (the lake's marker makes
 it a no-op) and re-records it — a duplicate journal line, which
-``lineage()`` tolerates (last record per epoch wins). A crash MID-append
-can tear the final line; the next ``record()`` isolates it behind a
-leading newline and ``lineage()`` skips it (that epoch's retry
+``lineage()`` tolerates (the last applied record per epoch wins). A crash
+MID-append can tear the final line; the next ``record()`` isolates it
+behind a leading newline and ``lineage()`` skips it (that epoch's retry
 re-recorded it). The state file itself is always replaced atomically.
 """
 
@@ -112,6 +112,8 @@ class Checkpoint:
             "counts": result.counts,
             "changed_buckets": result.changed_buckets,
             "offsets": {str(k): v for k, v in result.offsets.items()},
+            "path": result.path,
+            "fallback": result.fallback,
         }
         # journal first (append-only, O(1) per epoch — the complete audit
         # trail)
@@ -133,7 +135,11 @@ class Checkpoint:
             f.flush()
             os.fsync(f.fileno())
 
-        state["epochs"][str(result.epoch_id)] = entry
+        # a skipped retry of an applied epoch carries no counts: it must not
+        # hide the applied entry
+        prev = state["epochs"].get(str(result.epoch_id))
+        if not (result.skipped and prev is not None and not prev.get("skipped")):
+            state["epochs"][str(result.epoch_id)] = entry
         if not result.skipped:
             state["done_runs"] = _merge_into_runs(state["done_runs"], result.epoch_id)
         # bound the inline window — full lineage lives in the journal
@@ -151,10 +157,13 @@ class Checkpoint:
 
     def lineage(self) -> Iterator[dict[str, Any]]:
         """The full per-epoch audit trail, oldest first (the journal;
-        empty before the first ``record()``). A crash-retried epoch can
-        appear twice — the LAST record per epoch is the one whose state
-        replace landed, so consumers that want one-per-epoch should fold
-        with last-wins. A line torn by a crash
+        empty before the first ``record()``). An epoch can appear more than
+        once: a crash-retried epoch is re-recorded, and a retry that found
+        the epoch committed records a skipped line with no counts.
+        Consumers that want one record per epoch fold with "the last
+        applied record wins" — the last line with ``skipped`` false, or
+        the last line when the epoch was never applied here — the rule
+        ``record()`` keeps for the state's window. A line torn by a crash
         mid-append is skipped (its epoch was re-recorded on resume — the
         healing newline in ``record()`` keeps the damage isolated)."""
         if not os.path.exists(self.journal_path):

@@ -88,10 +88,13 @@ from dataclasses import dataclass, field, fields as dataclass_fields, replace as
 from functools import lru_cache
 from typing import Any
 
+import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_schema
 
 BUCKET_COL = "bucket"
 _WRITE_PARTITION_COL = "bucket_p"
@@ -470,6 +473,91 @@ def _delta_successor(m: Manifest, operation: str, **fields: Any) -> Manifest:
     nm = _apply_delta_record(m, rec)
     nm._delta = rec
     return nm
+
+
+# Spark stamps the exact logical schema of every DataFrame it writes into
+# the parquet footer under this key — and reads it back preferentially
+# during its own schema inference, so the footer value IS the schema a
+# spark.read probe of the same dir would return.
+SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def write_arrow_file(t: pa.Table, path: str, row_group_size: int | None = None) -> None:
+    """Write ``t`` as one parquet file that Spark reads as one of its own:
+    the footer carries Spark's schema key (every field nullable, as a
+    file scan reports it), so ``merge._dir_schema_json`` and schema
+    inference see Spark's types, not a re-inference from parquet types.
+    ``t``'s columns must already hold Spark's Arrow types
+    (``to_arrow_schema``): timestamps in UTC microseconds, which pyarrow
+    stores as INT64 instants that Spark reads back exactly."""
+    spark_schema = T.StructType(
+        [T.StructField(f.name, f.dataType, True) for f in from_arrow_schema(t.schema).fields]
+    )
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    pq.write_table(
+        t.replace_schema_metadata({SPARK_SCHEMA_KEY: spark_schema.json().encode("utf-8")}),
+        path,
+        compression="snappy",
+        row_group_size=row_group_size,
+    )
+
+
+def _write_arrow_buckets(
+    t: pa.Table, out: str, sort_cols: list[str], block_size: int | None
+) -> None:
+    """The Arrow writer of ``LakeTable._write_data``: the frame writer's
+    layout (one file per bucket under ``bucket_p=K``, rows ordered by
+    ``sort_cols`` ascending with NULLs first) for a table that already
+    carries Spark's ``__khash``. Row order within a file is a pruning
+    layout, not a contract, so a nested sort column is skipped rather
+    than given an Arrow ordering of its own."""
+    if KHASH_COL not in t.column_names:
+        raise ValueError(f"an Arrow data write needs Spark's {KHASH_COL!r} column")
+    for b in sorted(pc.unique(t[BUCKET_COL]).to_pylist()):
+        part = t.filter(pc.equal(t[BUCKET_COL], b))
+        keys = [(c, "ascending") for c in sort_cols if not pa.types.is_nested(part.schema.field(c).type)]
+        if keys:
+            part = part.take(pc.sort_indices(part, sort_keys=keys, null_placement="at_start"))
+        # ``write.parquet.block.size`` is bytes (parquet-mr); pyarrow
+        # sizes row groups in rows — scale by the in-memory row width
+        rows = None
+        if block_size:
+            rows = max(1, block_size * part.num_rows // max(1, part.nbytes))
+        name = f"part-00000-{uuid.uuid4()}.c000.snappy.parquet"
+        write_arrow_file(part, os.path.join(out, f"{_WRITE_PARTITION_COL}={b}", name), rows)
+
+
+def _write_frame(
+    df: DataFrame, out: str, key_cols: list[str], sort_cols: list[str], block_size: Any
+) -> None:
+    """The Spark writer of ``_write_data``; its Arrow twin is
+    ``_write_arrow_buckets``."""
+    from ..functions.hashing import key_hash
+
+    staged = (
+        # range-partition on bucket: ~one reducer per bucket (hash
+        # repartition collides buckets onto shared reducers, leaving
+        # stragglers + idle slots), so partitionBy emits one file per
+        # bucket per commit and the manifest stays compact
+        df.withColumn(KHASH_COL, key_hash(*key_cols))
+        .withColumn(_WRITE_PARTITION_COL, F.col(BUCKET_COL))
+        .repartitionByRange(F.col(BUCKET_COL))
+    )
+    if sort_cols:
+        # leading partition col satisfies the file writer's required
+        # ordering, so this one sort replaces (not stacks on) the
+        # writer's own dynamic-partition sort
+        staged = staged.sortWithinPartitions(_WRITE_PARTITION_COL, *sort_cols)
+    writer = (
+        # overwrite: until the manifest references this directory it
+        # is garbage by definition, and a crashed attempt leaves one
+        # behind — error-if-exists would make the RETRY of a failed
+        # epoch fail (found by tests/test_crash_injection.py)
+        staged.write.mode("overwrite").partitionBy(_WRITE_PARTITION_COL)
+    )
+    if block_size:
+        writer = writer.option("parquet.block.size", str(block_size))
+    writer.parquet(out)
 
 
 def align_to_schema(
@@ -1068,7 +1156,7 @@ class LakeTable:
     # --------------------------------------------------------------- write
     def _write_data(
         self,
-        df: DataFrame,
+        df: "DataFrame | pa.Table",
         commit_dir_name: str,
         m: Manifest,
         kind: str = "base",
@@ -1082,6 +1170,14 @@ class LakeTable:
         key-hash stats (from the parquet footers the rows-count pass
         already opens — free). ``kind="delta"`` marks the entries as MoR
         delta files.
+
+        Two writers, one postcondition body: a Spark frame goes through
+        ``_write_frame``; an Arrow table (a small merge-on-read epoch
+        served on the driver, ``merge._apply_epoch_driver``) goes through
+        ``_write_arrow_buckets`` and must already carry the ``__khash``
+        that Spark computed for it. Everything below the write —
+        directory name, schema version, the out-of-set check, footer
+        stats and Bloom filters — is shared (``_data_entries``).
 
         Postconditions it owns: the uuid suffix keeps racing attempts
         (two replayers of the same epoch, commit vs compact at the same
@@ -1108,11 +1204,7 @@ class LakeTable:
         tables); ``"none"`` disables; any comma-separated column list
         works (Iceberg sort-order analog). ``write.parquet.block.size``
         sets the row-group size in bytes — the pruning granularity."""
-        from ..functions.hashing import key_hash
-
-        key_cols, props = m.key_cols, m.properties
-        bloom_mode = str(props.get("write.bloom", "delta"))
-        with_bloom = bloom_mode != "none" if kind == "delta" else bloom_mode == "all"
+        props = m.properties
         spec = str(props.get("write.sort.cols", "")).strip()
         if spec == "none":
             sort_cols: list[str] = []
@@ -1121,35 +1213,32 @@ class LakeTable:
         elif spec:
             sort_cols = [c.strip() for c in spec.split(",")]
         else:
-            sort_cols = list(key_cols)
+            sort_cols = list(m.key_cols)
+        block_size = props.get("write.parquet.block.size")
 
-        if schema_version is None:
-            schema_version = m.current_schema_version
         out = os.path.join(self._data_dir, f"{commit_dir_name}-{uuid.uuid4().hex[:6]}")
-        staged = (
-            # range-partition on bucket: ~one reducer per bucket (hash
-            # repartition collides buckets onto shared reducers, leaving
-            # stragglers + idle slots), so partitionBy emits one file per
-            # bucket per commit and the manifest stays compact
-            df.withColumn(KHASH_COL, key_hash(*key_cols))
-            .withColumn(_WRITE_PARTITION_COL, F.col(BUCKET_COL))
-            .repartitionByRange(F.col(BUCKET_COL))
+        if isinstance(df, DataFrame):
+            _write_frame(df, out, list(m.key_cols), sort_cols, block_size)
+        else:
+            _write_arrow_buckets(df, out, sort_cols, int(block_size) if block_size else None)
+        return self._data_entries(
+            out, commit_dir_name, m, kind, buckets,
+            m.current_schema_version if schema_version is None else schema_version,
         )
-        if sort_cols:
-            # leading partition col satisfies the file writer's required
-            # ordering, so this one sort replaces (not stacks on) the
-            # writer's own dynamic-partition sort
-            staged = staged.sortWithinPartitions(_WRITE_PARTITION_COL, *sort_cols)
-        writer = (
-            # overwrite: until the manifest references this directory it
-            # is garbage by definition, and a crashed attempt leaves one
-            # behind — error-if-exists would make the RETRY of a failed
-            # epoch fail (found by tests/test_crash_injection.py)
-            staged.write.mode("overwrite").partitionBy(_WRITE_PARTITION_COL)
-        )
-        if props.get("write.parquet.block.size"):
-            writer = writer.option("parquet.block.size", str(props["write.parquet.block.size"]))
-        writer.parquet(out)
+
+    def _data_entries(
+        self,
+        out: str,
+        commit_dir_name: str,
+        m: Manifest,
+        kind: str,
+        buckets: "set[int] | None",
+        schema_version: int,
+    ) -> list[dict[str, Any]]:
+        """The postconditions of ``_write_data`` over the files either
+        writer left under ``out``."""
+        bloom_mode = str(m.properties.get("write.bloom", "delta"))
+        with_bloom = bloom_mode != "none" if kind == "delta" else bloom_mode == "all"
         entries: list[dict[str, Any]] = []
         for d in sorted(os.listdir(out)):
             if not d.startswith(f"{_WRITE_PARTITION_COL}="):
@@ -1275,7 +1364,7 @@ class LakeTable:
 
     def _commit_epoch(
         self,
-        df: DataFrame,
+        df: "DataFrame | pa.Table",
         changed_buckets: list[int],
         epoch_id: int,
         new_schema: T.StructType | None,
@@ -1320,7 +1409,10 @@ class LakeTable:
                     # guaranteed by the single-ingest-writer rule (the
                     # next epoch's stamp is its snapshot version + 1 ≥
                     # this commit's final version + 1 > this stamp).
-                    df = df.withColumn(MOR_ORDER_COL, F.lit(m.version + 1).cast("long"))
+                    if isinstance(df, DataFrame):
+                        df = df.withColumn(MOR_ORDER_COL, F.lit(m.version + 1).cast("long"))
+                    else:
+                        df = df.append_column(MOR_ORDER_COL, pa.repeat(m.version + 1, df.num_rows))
                 # data files are written ONCE, before the CAS loop
                 entries = self._write_data(
                     df, f"{'d' if delta else 'c'}{m.version + 1}-e{epoch_id}", m, kind, changed, sv
@@ -1366,7 +1458,7 @@ class LakeTable:
 
     def commit_delta_buckets(
         self,
-        df: DataFrame,
+        df: "DataFrame | pa.Table",
         changed_buckets: list[int],
         epoch_id: int,
         new_schema: T.StructType | None = None,
@@ -1390,9 +1482,10 @@ class LakeTable:
         pay a merge shuffle until ``compact()`` folds the deltas back in.
 
         Same idempotent atomic protocol as ``commit_buckets``: write
-        data → publish manifest; a committed epoch is a no-op.
+        data → publish manifest; a committed epoch is a no-op. ``df`` may
+        also be an Arrow table that carries ``__khash`` (``_write_data``).
         """
-        if MOR_OP_COL not in df.columns:
+        if MOR_OP_COL not in (df.columns if isinstance(df, DataFrame) else df.column_names):
             raise ValueError(f"delta commit requires the {MOR_OP_COL!r} column")
         return self._commit_epoch(df, changed_buckets, epoch_id, new_schema, base_version, "delta")
 
@@ -2145,7 +2238,10 @@ class LakeTable:
         """Delete data files referenced only by manifests older than the
         newest ``keep_versions`` (Iceberg expire_snapshots + orphan-file
         removal). Time travel remains possible within the kept window.
-        Returns {files_deleted, manifests_deleted, bytes_freed}.
+        Returns {files_deleted, manifests_deleted, bytes_freed}; the file
+        counts are data files. A live file's checksum sidecar
+        (``.<name>.crc``) stays while the file is referenced and goes
+        with it, uncounted, as do leftover ``_SUCCESS`` markers.
 
         ``dry_run=True`` (Iceberg/Delta's VACUUM DRY RUN) reports the
         same counts while touching NOTHING — no data files, no
@@ -2286,6 +2382,14 @@ class LakeTable:
                 p = os.path.normpath(os.path.join(dirpath, fn))
                 if p in referenced:
                     continue
+                # Hadoop's checksum sidecar ``.<name>.crc`` belongs to its
+                # data file: a checksummed open of a live file fails once
+                # its sidecar is gone (FAILED_READ_FILE). It goes only
+                # with its file; pyarrow-written files have none
+                if fn.startswith(".") and fn.endswith(".crc") and (
+                    os.path.normpath(os.path.join(dirpath, fn[1:-4])) in referenced
+                ):
+                    continue
                 # a file can vanish between the walk listing and the stat:
                 # a crashed commit's RETRY mode("overwrite")s its own
                 # data/<commit_dir>/ garbage, and Spark's _temporary
@@ -2301,8 +2405,12 @@ class LakeTable:
                         os.remove(p)
                 except OSError:
                     continue
-                stats["bytes_freed"] += size
-                stats["files_deleted"] += 1
+                # the counts are what retention frees — data files; the
+                # sidecars and job markers (``_SUCCESS``) that go with
+                # them are not counted
+                if fn.endswith(".parquet"):
+                    stats["bytes_freed"] += size
+                    stats["files_deleted"] += 1
         for fn in os.listdir(self._meta_dir):
             # crashed-publish temp files (v{N}.json.tmp.{hex}) age out
             # with the same cutoff as data files (checked BEFORE the

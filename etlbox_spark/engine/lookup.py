@@ -1,5 +1,7 @@
-"""Point lookups for ``LakeTable.lookup_keys``: the probe, the gate, and
-the driver-side read of the pruned files.
+"""The driver path: point lookups for ``LakeTable.lookup_keys`` (the
+probe, the gate, and the driver-side read of the pruned files), and the
+Arrow kernels of a small merge epoch served on the driver
+(``merge._apply_epoch_driver``; see the section at the end).
 
 A 50-key probe of a merge-on-read table resolves to about 50 rows in
 about 20 files that the manifest has already picked (bucket, min/max
@@ -56,6 +58,26 @@ if TYPE_CHECKING:
 # larger reads to executors, which a cluster scales out.
 DRIVER_MAX_ROWS = 1_000_000
 
+# Largest merge epoch (event rows, by footer count) served on the driver
+# (``merge._apply_epoch_driver``); its events and snapshot rows together
+# also stay under ``DRIVER_MAX_ROWS``. An epoch holds more copies of its
+# rows than a probe does (the events, their Spark relation, the
+# projection's result, the winners, the snapshot rows), so it gets its
+# own bound. Measured on a 4-vCPU host at local[4], with bench.py's
+# event shape (``gen_events``) landed into a 32-bucket merge-on-read table,
+# the second epoch of a fresh table (its table about 0.78x the epoch),
+# median of two, driver vs Spark path: 1k events 0.48 vs 3.55 s, 10k
+# 0.83 vs 4.08 s, 100k 3.62 vs 5.62 s, 200k 2.75 vs 6.22 s, 400k 5.02 vs
+# 8.38 s, 800k (bench.py's MoR epoch) 8.25 vs 12.99 s. No crossover in
+# time; what grows is the driver's memory: the Python process peaked at
+# 0.17, 0.20, 0.36, 0.55, 0.93 and 1.59 GB (0.12 GB with Spark started).
+# The bound holds the driver to about half a gigabyte, as
+# ``DRIVER_MAX_ROWS`` does, and caps what a refusal by the snapshot rule
+# (checked after the projection) adds before the Spark path runs: 1.1 to
+# 3.5 s at 100k–200k events, 5.2 s at 800k (one run each; BENCH.md,
+# "The epoch gate").
+DRIVER_EPOCH_MAX_ROWS = 200_000
+
 _ORDER_RANK = "__op_rank"
 _ROW_INDEX = "__i"
 
@@ -71,9 +93,10 @@ def serve_probe(
     buckets = sorted({int(r["__b"]) for r in hb})
     bset = set(buckets)
     entries = table._prune_by_khash([e for e in m.files if e["bucket"] in bset], hashes)
-    if _driver_covers(m, entries):
+    if types_rule(m.schema(), key_cols) is None and files_rule(m, entries) is None:
         cast_keys = probe_table(probe.schema, [tuple(r[c] for c in key_cols) for r in hb])
-        return _read_on_driver(spark, table.root, m, entries, hashes, cast_keys)
+        rows = _read_on_driver(table.root, m, entries, hashes, cast_keys)
+        return spark.createDataFrame(rows.combine_chunks(), output_schema(m))
     # pin the snapshot the hashes/buckets were derived from (ADVICE
     # r03): re-resolving _latest inside read() would race a concurrent
     # commit/rebucket — bucket ids computed under the old n_buckets
@@ -90,13 +113,13 @@ def probe_table(ktype: T.StructType, keys: list[tuple]) -> pa.Table:
     if bad:
         raise ValueError(f"lookup key {bad[0]!r} does not match the {width} key columns {ktype.names}")
     cols = list(zip(*keys)) if keys else [()] * width
-    schema = _arrow_schema(ktype)
+    schema = arrow_schema(ktype)
     return pa.Table.from_arrays(
         [pa.array(list(c), type=f.type) for c, f in zip(cols, schema)], schema=schema
     )
 
 
-def _arrow_schema(schema: T.StructType) -> pa.Schema:
+def arrow_schema(schema: T.StructType) -> pa.Schema:
     return to_arrow_schema(schema, error_on_duplicated_field_names_in_struct=True)
 
 
@@ -119,33 +142,47 @@ def _arrow_exact(dt: T.DataType) -> bool:
     return isinstance(dt, _ARROW_ATOMIC)
 
 
-def _driver_covers(m: "Manifest", entries: list[dict[str, Any]]) -> bool:
-    """The driver path serves a probe only when all of these hold;
-    otherwise ``read()`` plus the semi-join runs, so no rule gets a
-    second author:
+# key types the driver never serves: Spark normalizes NaN and -0.0 in
+# grouping and join keys, Arrow does not, and a session-zoned timestamp's
+# collected value depends on the Python process's zone
+INEXACT_KEY_TYPES = (T.FloatType, T.DoubleType, T.TimestampType)
 
-    * the pruned files hold at most ``DRIVER_MAX_ROWS`` rows (manifest
-      counts, known before any read; an entry without a count falls
-      back);
-    * every pruned file's stored schema is the current one — there is no
-      Arrow copy of ``align_to_schema``;
-    * no key column is float or double (Spark normalizes NaN and -0.0 in
-      grouping and join keys, Arrow does not) or a session-zoned
-      timestamp (its collected value depends on the Python process's
-      zone);
-    * every column's type round-trips through Arrow exactly."""
+
+def types_rule(schema: T.StructType, key_cols: list[str]) -> str | None:
+    """The type rules of the driver path, checked once per schema (the
+    table's, and for a merge epoch also the events'). Returns None, or
+    the name of the rule that failed:
+
+    * ``key type`` — no key column is of ``INEXACT_KEY_TYPES``;
+    * ``types`` — every column's type round-trips through Arrow exactly
+      (``_arrow_exact``)."""
+    if any(isinstance(schema[c].dataType, INEXACT_KEY_TYPES) for c in key_cols):
+        return "key type"
+    return None if all(_arrow_exact(f.dataType) for f in schema.fields) else "types"
+
+
+def files_rule(m: "Manifest", entries: list[dict[str, Any]], extra_rows: int = 0) -> str | None:
+    """The file rules of the driver path: the driver reads ``entries`` of
+    snapshot ``m`` only when both hold (the caller has already checked
+    ``types_rule`` on ``m``'s schema); otherwise the caller's Spark path
+    runs, so no rule gets a second author. Returns None, or the name of
+    the rule that failed:
+
+    * ``rows`` — the files hold at most ``DRIVER_MAX_ROWS`` rows, less
+      ``extra_rows`` the caller also holds (manifest counts, known before
+      any read; an entry without a count falls back);
+    * ``schema version`` — every file's stored schema is the current
+      one: there is no Arrow copy of ``align_to_schema``."""
     rows = [e.get("rows") for e in entries]
-    if None in rows or sum(rows) > DRIVER_MAX_ROWS:
-        return False
+    if None in rows or extra_rows + sum(rows) > DRIVER_MAX_ROWS:
+        return "rows"
     cur = m.schema()
     if any(m.schema(v) != cur for v in {e["schema_version"] for e in entries}):
-        return False
-    if any(isinstance(cur[c].dataType, (T.FloatType, T.DoubleType, T.TimestampType)) for c in m.key_cols):
-        return False
-    return all(_arrow_exact(f.dataType) for f in cur.fields)
+        return "schema version"
+    return None
 
 
-def _output_schema(m: "Manifest") -> T.StructType:
+def output_schema(m: "Manifest") -> T.StructType:
     """``read()``'s columns and types with ``bucket``; file scans make
     every column nullable, and so does this."""
     return T.StructType(
@@ -155,15 +192,16 @@ def _output_schema(m: "Manifest") -> T.StructType:
 
 
 def _read_on_driver(
-    spark: SparkSession,
     root: str,
     m: "Manifest",
     entries: list[dict[str, Any]],
     hashes: list[int],
     probe: pa.Table,
-) -> DataFrame:
-    out = _output_schema(m)
-    target = _arrow_schema(out)
+) -> pa.Table:
+    """The current rows of snapshot ``m`` for the keys of ``probe``, read
+    from ``entries`` (pruned to ``hashes``), as an Arrow table typed by
+    ``output_schema(m)``."""
+    target = arrow_schema(output_schema(m))
     mor = pa.schema([pa.field(MOR_OP_COL, pa.string()), pa.field(MOR_ORDER_COL, pa.int64())])
     # INT96 timestamps at microseconds: the nanosecond default overflows
     # outside 1677–2262
@@ -180,14 +218,13 @@ def _read_on_driver(
         return got.cast(schema)
 
     dirty = {e["bucket"] for e in entries if e.get("kind") == "delta"}
-    result = probe_merge(
+    return probe_merge(
         scan([e for e in entries if e["bucket"] not in dirty], target),
         scan([e for e in entries if e["bucket"] in dirty and e.get("kind") != "delta"], target),
         scan([e for e in entries if e.get("kind") == "delta"], pa.schema([*target, *mor])),
         probe,
         list(m.key_cols),
     )
-    return spark.createDataFrame(result.combine_chunks(), out)
 
 
 def probe_merge(
@@ -242,3 +279,110 @@ def _first_of_key(rows: pa.Table, key_cols: list[str]) -> pa.Array:
         col = rows[k].combine_chunks()
         change = pc.or_(change, pc.not_equal(col.slice(1), col.slice(0, n - 1)))
     return pa.concat_arrays([pa.array([True]), change])
+
+
+# ------------------------------------------- small merge epochs on the driver
+#
+# The set operations of a small merge-on-read DELTA epoch
+# (``merge._apply_epoch_driver``). Spark still computes every per-row
+# expression of the epoch (casts, key hash, bucket, LWW tie-break,
+# malformed predicate) in one projection; these kernels only pick, join
+# and count. Each mirrors a Spark rule named in its docstring, and that
+# rule names the kernel back: change the two together.
+
+ACTION_COL = "action"
+_BATCH_INDEX = "__bi"
+_SNAP_INDEX = "__si"
+
+
+def lww_pick(rows: pa.Table, group_cols: list[str], order_cols: list[str]) -> pa.Table:
+    """The last-writer-wins rule of ``operators.dedupe.dedupe_lww`` (what
+    ``merge.dedupe_lww`` runs) over an Arrow table: per value of
+    ``group_cols``, the row with the highest ``order_cols`` tuple — for a
+    merge epoch ``(seq, tie)``, where Spark computed the tie-break hash
+    (``operators.dedupe.payload_tie_break``). ``rows`` must hold no NULL
+    in ``group_cols`` or ``order_cols``: Spark orders NULL lowest, Arrow
+    sorts it last."""
+    ordered = rows.sort_by(
+        [(c, "ascending") for c in group_cols] + [(c, "descending") for c in order_cols]
+    )
+    return ordered.filter(_first_of_key(ordered, group_cols))
+
+
+def classify_delta(
+    batch: pa.Table,
+    snap: pa.Table,
+    key_cols: list[str],
+    op_col: str,
+    compare_cols: list[str],
+    payload_cols: list[str],
+) -> pa.Table:
+    """The ``MergeMode.DELTA`` rule of ``merge.classify`` over Arrow
+    tables. ``batch`` holds the LWW winners (NULL-free keys), ``snap``
+    the current rows of their keys; both carry ``payload_cols`` at the
+    table's types. Per ``batch`` row:
+
+    * a tombstone (``op_col`` = ``delete``) of a present key logs
+      ``delete``, one of an absent key logs nothing;
+    * an absent key logs ``insert``;
+    * a present key logs ``update`` when a compare column differs
+      (NULL-safe, Spark's ``<=>``), else ``exists``.
+
+    Snapshot-only keys are not logged: DELTA leaves them untouched.
+    Returns the logged rows: ``batch``'s columns, with ``snap``'s payload
+    for ``delete`` and ``exists`` (the old value, as ``classify`` keeps
+    it), plus ``action``."""
+    b_index = pa.array(np.arange(batch.num_rows, dtype=np.int64))
+    s_index = pa.array(np.arange(snap.num_rows, dtype=np.int64))
+    pairs = (
+        batch.select(key_cols).append_column(_BATCH_INDEX, b_index)
+        .join(snap.select(key_cols).append_column(_SNAP_INDEX, s_index), keys=key_cols, join_type="left outer")
+        .sort_by(_BATCH_INDEX)  # the join's output order is not deterministic
+    )
+    e = batch.take(pairs[_BATCH_INDEX])
+    s = snap.take(pairs[_SNAP_INDEX])  # a NULL index takes a NULL row
+    s_here = pc.is_valid(pairs[_SNAP_INDEX])
+    tomb = pc.equal(e[op_col], "delete")
+    same = pa.array(np.ones(e.num_rows, dtype=bool))
+    for c in compare_cols:
+        eq = pc.fill_null(pc.equal(s[c], e[c]), False)
+        same = pc.and_(same, pc.or_(eq, pc.and_(pc.is_null(s[c]), pc.is_null(e[c]))))
+    act = lambda a: pa.scalar(a, pa.string())  # noqa: E731
+    action = pc.if_else(
+        s_here,
+        pc.if_else(tomb, act("delete"), pc.if_else(same, act("exists"), act("update"))),
+        pc.if_else(tomb, act(None), act("insert")),
+    )
+    take_new = pc.fill_null(pc.is_in(action, value_set=pa.array(["insert", "update"])), False)
+    take_old = pc.fill_null(pc.is_in(action, value_set=pa.array(["delete", "exists"])), False)
+    old = e.filter(take_old)
+    for c in payload_cols:
+        old = old.set_column(old.schema.get_field_index(c), c, s[c].filter(take_old))
+    return pa.concat_tables([
+        e.filter(take_new).append_column(ACTION_COL, action.filter(take_new)),
+        old.append_column(ACTION_COL, action.filter(take_old)),
+    ])
+
+
+def epoch_stats(
+    batch: pa.Table, logged: pa.Table, seq_col: str
+) -> tuple[dict[str, int], list[int], dict[int, dict[str, int]]]:
+    """``MergeResult``'s counts, changed buckets and offsets, as
+    ``merge._apply_epoch_pinned`` derives them with Spark (the
+    ``groupBy(bucket)`` offsets job over the LWW winners, and the
+    ``groupBy(bucket, action)`` count over the staged delta log): per
+    action the logged rows, the buckets with an insert, update or
+    delete, and per bucket of ``batch`` its highest ``seq_col`` and its
+    row count. Every output is at most ``n_buckets`` values."""
+    counts = {
+        r["values"]: int(r["counts"]) for r in pc.value_counts(logged[ACTION_COL]).to_pylist()
+    }
+    changed = logged.filter(pc.not_equal(logged[ACTION_COL], "exists"))[BUCKET_COL]
+    g = batch.group_by(BUCKET_COL).aggregate([(seq_col, "max"), (seq_col, "count")])
+    offsets = {
+        int(b): {"max_seq": int(mx), "rows": int(n)}
+        for b, mx, n in zip(
+            g[BUCKET_COL].to_pylist(), g[f"{seq_col}_max"].to_pylist(), g[f"{seq_col}_count"].to_pylist()
+        )
+    }
+    return counts, sorted(pc.unique(changed).to_pylist()), offsets

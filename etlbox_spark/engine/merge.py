@@ -35,20 +35,35 @@ import os
 import re
 import shutil
 import time
+import uuid
 from dataclasses import dataclass, field
 
+import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
-
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_schema
 
-from ..functions.hashing import bucket_expr
+from ..functions.hashing import bucket_expr, key_hash
 from ..operators.dedupe import dedupe_lww as _dedupe_lww
-from .lake import BUCKET_COL, MOR_OP_COL, STALE_ATTEMPT_S, LakeTable, align_to_schema
+from ..operators.dedupe import payload_tie_break
+from . import lookup
+from .lake import (
+    BUCKET_COL,
+    KHASH_COL,
+    MOR_OP_COL,
+    SPARK_SCHEMA_KEY,
+    STALE_ATTEMPT_S,
+    LakeTable,
+    align_to_schema,
+    write_arrow_file,
+)
+from .lookup import ACTION_COL
 from .spec import ChangeAction, MergeMode, MergeSpec
-
-ACTION_COL = "action"
 
 
 def _epoch_log_paths(root: str, epoch_id: int) -> tuple[str, str]:
@@ -66,14 +81,21 @@ def _epoch_log_paths(root: str, epoch_id: int) -> tuple[str, str]:
     )
 
 
-def _stage_epoch_log(df: DataFrame, root: str, epoch_id: int) -> str:
+def _stage_epoch_log(df: "DataFrame | pa.Table", root: str, epoch_id: int) -> str:
     """Write an uncommitted epoch's rows under its in-flight name and
-    return that path. ``mode("overwrite")`` replaces a crashed attempt's
-    rows; the epoch is not committed (the marker no-op returns before
-    staging), so a visible final dir is a failed attempt's garbage."""
+    return that path. The write replaces a crashed attempt's rows; the
+    epoch is not committed (the marker no-op returns before staging), so
+    a visible final dir is a failed attempt's garbage. A Spark frame is
+    written by Spark; an Arrow table (an epoch served on the driver) as
+    one pyarrow file carrying Spark's schema key, so the feed readers
+    see the same types either way."""
     tmp, final = _epoch_log_paths(root, epoch_id)
     shutil.rmtree(final, ignore_errors=True)
-    df.write.mode("overwrite").parquet(tmp)
+    if isinstance(df, DataFrame):
+        df.write.mode("overwrite").parquet(tmp)
+    else:
+        shutil.rmtree(tmp, ignore_errors=True)
+        write_arrow_file(df, os.path.join(tmp, f"part-00000-{uuid.uuid4()}.c000.snappy.parquet"))
     return tmp
 
 
@@ -216,11 +238,6 @@ def _merge_change_schemas(a: T.StructType, b: T.StructType) -> T.StructType:
     return T.StructType(out)
 
 
-# Spark stamps the exact logical schema of every DataFrame it writes into
-# the parquet footer under this key — and reads it back preferentially
-# during its own schema inference, so the footer value IS the schema a
-# spark.read probe of the same dir would return.
-_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 # above this many dirs the footer probe fans out as one Spark job — the
 # measured crossover (BENCH_LOG_TAIL.json; script retired after d21bc57):
 # the driver loop runs at ~0.19 ms/dir (1.5 s at 8k dirs) while the
@@ -241,7 +258,7 @@ def _dir_schema_json(d: str) -> str | None:
         if not names:
             return None
         meta = pq.read_schema(os.path.join(d, names[0])).metadata or {}
-        raw = meta.get(_SPARK_SCHEMA_KEY)
+        raw = meta.get(SPARK_SCHEMA_KEY)
         return raw.decode("utf-8") if raw is not None else None
     except Exception:  # noqa: BLE001 — any footer failure routes to the fallback probe
         return None
@@ -557,12 +574,20 @@ def read_quarantine(
 
 @dataclass
 class MergeResult:
+    """One epoch's outcome. ``path`` says where an applied epoch ran:
+    ``"driver"`` (``_apply_epoch_driver``) or ``"spark"``; for
+    ``"spark"``, ``fallback`` names why — the driver gate's failed rule,
+    or ``"dataframe"`` when the epoch came in as a frame, not files. A
+    skipped epoch ran nowhere: both are None."""
+
     epoch_id: int
     version: int
     skipped: bool = False
     counts: dict[str, int] = field(default_factory=dict)
     changed_buckets: list[int] = field(default_factory=list)
     offsets: dict[int, dict[str, int]] = field(default_factory=dict)
+    path: str | None = None
+    fallback: str | None = None
 
 
 def dedupe_lww(events: DataFrame, spec: MergeSpec) -> DataFrame:
@@ -582,6 +607,9 @@ def dedupe_lww(events: DataFrame, spec: MergeSpec) -> DataFrame:
     hash tie-breaker (``operators.dedupe.payload_tie_break``; appending
     the full payload struct instead would double the combiner state on
     this 10^10-row shuffle).
+
+    A small epoch served on the driver picks its winners with the Arrow
+    twin of this rule, ``lookup.lww_pick``; change the two together.
     """
     return _dedupe_lww(events, spec.key_cols, [spec.seq_col])
 
@@ -624,6 +652,9 @@ def classify(
     + bucket + seq + ``action`` (insert/update/delete/exists, or NULL for
     rows that survive untouched and unlogged — DELTA-mode snapshot-only
     rows and tombstones of absent keys).
+
+    ``lookup.classify_delta`` is the Arrow twin of the DELTA rule below,
+    for small epochs served on the driver; change the two together.
     """
     keys = list(spec.key_cols)
     s = snapshot.withColumn("__s_present", F.lit(True)).alias("s")
@@ -699,7 +730,7 @@ def classify(
 def apply_epoch(
     spark: SparkSession,
     lake: LakeTable,
-    events: DataFrame,
+    events: "DataFrame | list[str]",
     spec: MergeSpec,
     mode: MergeMode,
     epoch_id: int,
@@ -723,6 +754,13 @@ def apply_epoch(
       where a small epoch against a 100 TB table must not rewrite
       multi-GB buckets to change a few rows (write amplification is the
       10^10-event bottleneck, see lake.py).
+
+    ``events`` is a DataFrame, or the parquet files of a landed epoch
+    (``runner.replay``). A DataFrame always takes the Spark path. Files
+    let a small merge-on-read DELTA epoch run on the driver instead
+    (``_apply_epoch_driver``: at most one Spark job, for the per-row
+    expressions), and fall back to reading them with Spark when its gate
+    says no. ``MergeResult.path`` and ``fallback`` record which ran.
     """
     # the WHOLE read-classify-commit span holds an in-flight marker (not
     # just the write window): a live marker pins the snapshot versions
@@ -747,8 +785,15 @@ def apply_epoch(
             # the epoch is committed, so expose its fully written logs
             _finalize_logs(lake, delta_dir, epoch_id)
             return MergeResult(epoch_id=epoch_id, version=man.version, skipped=True)
+        if isinstance(events, DataFrame):
+            fallback = "dataframe"
+        else:
+            res = _apply_epoch_driver(spark, lake, man, events, spec, mode, epoch_id, delta_dir)
+            if isinstance(res, MergeResult):
+                return res
+            fallback, events = res, spark.read.parquet(*events)
         return _apply_epoch_pinned(
-            spark, lake, man, events, spec, mode, epoch_id, delta_dir
+            spark, lake, man, events, spec, mode, epoch_id, delta_dir, fallback
         )
 
 
@@ -761,6 +806,7 @@ def _apply_epoch_pinned(
     mode: MergeMode,
     epoch_id: int,
     delta_dir: str | None,
+    fallback: str,
 ) -> MergeResult:
     # dead-letter routing first: a malformed event must not poison the
     # LWW window or the null-safe classify join (spec.on_malformed)
@@ -790,9 +836,12 @@ def _apply_epoch_pinned(
     # re-insert the key as a duplicate)
     batch = batch.withColumn(BUCKET_COL, bucket_expr(man.n_buckets, *spec.key_cols))
     # one job yields both the per-partition offsets (checkpoint lineage)
-    # and the touched-bucket set (snapshot pruning)
+    # and the touched-bucket set (snapshot pruning); lookup.epoch_stats
+    # derives offsets, counts and changed buckets on the driver path.
+    # Under on_malformed="ignore" a bucket's only winner may have a NULL
+    # seq, and then so has its max
     offsets = {
-        int(r[0]): {"max_seq": int(r[1]), "rows": int(r[2])}
+        int(r[0]): {"max_seq": None if r[1] is None else int(r[1]), "rows": int(r[2])}
         for r in batch.groupBy(BUCKET_COL)
         .agg(F.max(spec.seq_col), F.count(F.lit(1)))
         .collect()
@@ -884,4 +933,223 @@ def _apply_epoch_pinned(
         counts={k: int(v) for k, v in counts.items()},
         changed_buckets=sorted(changed),
         offsets=offsets,
+        path="spark",
+        fallback=fallback,
+    )
+
+
+# --------------------------------------------- small epochs on the driver
+
+_TIE, _BAD = "__tie", "__bad"
+
+
+def _read_events(files: list[str]) -> tuple[pa.Table, T.StructType] | None:
+    """A landed epoch read by pyarrow (one chunk, typed as Spark's Arrow
+    types), with the Spark schema ``spark.read.parquet`` gives it — or
+    None when that schema is not known exactly without a Spark job: the
+    files' schemas differ, or a file has no Spark footer key and a
+    column's Arrow type is not Spark's own for the type Spark infers
+    (nanosecond timestamps, unsigned ints, large strings, ...)."""
+    # INT96 timestamps (Spark's default) at microseconds: the nanosecond
+    # default overflows outside 1677–2262
+    tables = [pq.read_table(f, coerce_int96_timestamp_unit="us") for f in files]
+    first = tables[0].schema
+    if any(not t.schema.equals(first) for t in tables[1:]):
+        return None
+    raw = (first.metadata or {}).get(SPARK_SCHEMA_KEY)
+    try:
+        schema = _as_nullable(
+            T.StructType.fromJson(json.loads(raw)) if raw is not None else from_arrow_schema(first)
+        )
+        target = lookup.arrow_schema(schema)
+        if raw is None and [(f.name, f.type) for f in target] != [(f.name, f.type) for f in first]:
+            return None
+        return pa.concat_tables(tables).cast(target).combine_chunks(), schema
+    except (ValueError, TypeError, KeyError, PySparkException, pa.ArrowException):
+        return None
+
+
+# the ANSI errors of ``align_to_schema``'s casts: the Spark path would
+# drop the failing event in LWW before it casts, so these fall back
+_CAST_ERRORS = frozenset({"CAST_INVALID_INPUT", "CAST_OVERFLOW", "NUMERIC_VALUE_OUT_OF_RANGE"})
+# compare and seq types the driver never orders or compares: Spark
+# orders and compares NaN and -0.0 its own way, and Arrow has no
+# equality kernel for arrays
+_UNORDERED = (T.FloatType, T.DoubleType, T.ArrayType)
+
+
+def _driver_table_rule(man, spec: MergeSpec, mode: MergeMode) -> str | None:
+    """The driver gate's rules on the call and the table, checked from the
+    manifest before any read: the name of the first that fails, or None."""
+    if mode is not MergeMode.DELTA:
+        return "mode"
+    if man.properties.get("write.mode", "cow") != "mor":
+        return "write.mode"
+    if spec.on_malformed not in ("ignore", "quarantine", "fail"):
+        return "on_malformed"  # the Spark path raises the typed error
+    schema, keys = man.schema(), list(spec.key_cols)
+    rule = lookup.types_rule(schema, keys)
+    if rule is not None:
+        return rule
+    cmp = [schema[c].dataType for c in spec.compare_cols if c in schema.names and c not in keys]
+    return "compare type" if any(isinstance(dt, _UNORDERED) for dt in cmp) else None
+
+
+def _driver_events_rule(table_schema: T.StructType, ev_schema: T.StructType, spec: MergeSpec) -> str | None:
+    """The driver gate's rules on the events' schema, checked once they
+    are read: the name of the first that fails, or None."""
+    keys = list(spec.key_cols)
+    if any(c not in ev_schema.names for c in (*keys, spec.seq_col, spec.op_col)):
+        return "columns"
+    if evolve_schema(table_schema, ev_schema, spec) is not None:
+        return "schema"
+    rule = lookup.types_rule(ev_schema, keys)
+    if rule is not None:
+        return rule
+    return "compare type" if isinstance(ev_schema[spec.seq_col].dataType, _UNORDERED) else None
+
+
+def _cast_fields(t: pa.Table, target: pa.Schema) -> pa.Table:
+    """``t`` with each column named in ``target`` cast to its type."""
+    for f in target:
+        t = t.set_column(t.schema.get_field_index(f.name), f, t[f.name].cast(f.type))
+    return t
+
+
+def _apply_epoch_driver(
+    spark: SparkSession,
+    lake: LakeTable,
+    man,
+    files: list[str],
+    spec: MergeSpec,
+    mode: MergeMode,
+    epoch_id: int,
+    delta_dir: str | None,
+) -> "MergeResult | str":
+    """A small merge-on-read DELTA epoch on the driver, from its landed
+    files to its delta commit. Returns the ``MergeResult``, or the name
+    of the gate rule that failed; nothing is written before the gate
+    passes, so the Spark path then runs as if this had not been tried.
+
+    Spark stays the only author of every per-row expression: the
+    ``align_to_schema`` casts, ``key_hash``, ``bucket_expr``, the LWW
+    tie-break (``payload_tie_break``) and ``_malformed_pred`` run as one
+    projection over the events as a local relation — one Spark job, the
+    ``toArrow()`` that returns at most ``lookup.DRIVER_EPOCH_MAX_ROWS``
+    rows. Arrow then does the set operations (``lookup.lww_pick``,
+    ``classify_delta``, ``epoch_stats``) against the current rows of the
+    batch's keys from ``lookup._read_on_driver``, and pyarrow writes the
+    delta files and the staged feed log. The commit
+    (``commit_delta_buckets``), the log protocol and the compaction
+    policy are the Spark path's own.
+
+    The gate has no option. Each rule has one author and is checked as
+    soon as what it needs is known, cheapest first, so a refused epoch
+    pays for as little as possible:
+
+    1. from the manifest (``_driver_table_rule``): the mode is DELTA, the
+       table is merge-on-read, ``on_malformed`` is a known policy, the
+       table passes ``lookup.types_rule`` (no float, double or timestamp
+       key; every column ``lookup._arrow_exact``), and no compare column
+       is float, double or an array;
+    2. from the footers: the events hold at most
+       ``lookup.DRIVER_EPOCH_MAX_ROWS`` rows (``epoch rows``), and their
+       Spark schema is known without a Spark job (``event schema``,
+       ``_read_events``);
+    3. from the events' schema (``_driver_events_rule``): the key, seq
+       and op columns are there, ``evolve_schema`` returns None, the
+       events pass ``lookup.types_rule``, and the seq is not float,
+       double or an array;
+    4. from the projection: its casts all succeed (``cast``: an ANSI
+       cast that fails on an event LWW would have dropped is no error on
+       the Spark path; any other job failure is ``projection``), and no
+       event is malformed;
+    5. from the winners' key hashes: ``lookup.files_rule`` admits the
+       pruned snapshot files with the events counted against
+       ``lookup.DRIVER_MAX_ROWS``.
+
+    A refusal by rule 4 or 5 has paid for the projection's job before
+    the Spark path runs (BENCH.md, "The epoch gate", measures rule 5's)."""
+    rule = _driver_table_rule(man, spec, mode)
+    if rule is not None:
+        return rule
+    n_events = sum(pq.ParquetFile(f).metadata.num_rows for f in files)
+    if not files or n_events > lookup.DRIVER_EPOCH_MAX_ROWS:
+        return "epoch rows"
+    got = _read_events(files)
+    if got is None:
+        return "event schema"
+    events, ev_schema = got
+    table_schema = man.schema()
+    rule = _driver_events_rule(table_schema, ev_schema, spec)
+    if rule is not None:
+        return rule
+
+    keys = list(spec.key_cols)
+    # LWW groups the events' own key values, as dedupe_lww does before
+    # the align casts them
+    raw_keys = [f"__raw_{i}" for i in range(len(keys))]
+    ev = spark.createDataFrame(events, ev_schema)
+    pre = ev.select(
+        "*",
+        payload_tie_break(ev, [c for c in ev.columns if c not in keys]).alias(_TIE),
+        _malformed_pred(spec).alias(_BAD),
+        *[F.col(k).alias(r) for k, r in zip(keys, raw_keys)],
+    )
+    batch = align_to_schema(pre, table_schema, (spec.seq_col, spec.op_col, _TIE, _BAD, *raw_keys))
+    batch = batch.select(
+        "*", key_hash(*keys).alias(KHASH_COL), bucket_expr(man.n_buckets, *keys).alias(BUCKET_COL)
+    )
+    try:
+        rows = batch.toArrow()
+    except PySparkException as e:
+        return "cast" if (e.getCondition() or "").split(".")[0] in _CAST_ERRORS else "projection"
+    except Py4JJavaError:
+        return "projection"
+    if pc.any(rows[_BAD]).as_py():
+        return "malformed"
+
+    target = lookup.arrow_schema(lookup.output_schema(man))
+    winners = lookup.lww_pick(rows, raw_keys, [spec.seq_col, _TIE])
+    winners = _cast_fields(winners.select([*target.names, spec.seq_col, spec.op_col, KHASH_COL]), target)
+    touched = set(pc.unique(winners[BUCKET_COL]).to_pylist())
+    hashes = sorted(pc.unique(winners[KHASH_COL]).to_pylist())
+    entries = lake._prune_by_khash([e for e in man.files if e["bucket"] in touched], hashes)
+    rule = lookup.files_rule(man, entries, extra_rows=n_events)
+    if rule is not None:
+        return rule
+
+    snap = lookup._read_on_driver(lake.root, man, entries, hashes, winners.select(keys))
+    payload_cols = [c for c in table_schema.names if c not in keys]
+    cmp_cols = [c for c in spec.compare_cols if c in payload_cols]
+    logged = lookup.classify_delta(winners, snap, keys, spec.op_col, cmp_cols, payload_cols)
+    counts, changed, offsets = lookup.epoch_stats(winners, logged, spec.seq_col)
+
+    # the same writes, in the same order, as the Spark path's
+    if delta_dir is not None:
+        _stage_epoch_log(
+            logged.select([*keys, *payload_cols, BUCKET_COL, spec.seq_col, ACTION_COL]), delta_dir, epoch_id
+        )
+    if spec.on_malformed == "quarantine":
+        # an empty split leaves no dead-letter dir for the epoch
+        qroot = os.path.join(delta_dir if delta_dir is not None else lake.root, "_quarantine")
+        for d in _epoch_log_paths(qroot, epoch_id):
+            shutil.rmtree(d, ignore_errors=True)
+        counts["quarantine"] = 0
+    mor = logged.filter(pc.not_equal(logged[ACTION_COL], "exists"))
+    op = pc.if_else(pc.equal(mor[ACTION_COL], "delete"), pa.scalar("delete"), pa.scalar("upsert"))
+    mor = (
+        mor.select([*keys, *payload_cols, BUCKET_COL])
+        .append_column(MOR_OP_COL, op)
+        .append_column(KHASH_COL, mor[KHASH_COL])
+    )
+    version = lake.commit_delta_buckets(mor, changed, epoch_id, base_version=man.version)
+    _finalize_logs(lake, delta_dir, epoch_id)
+    return MergeResult(
+        epoch_id=epoch_id,
+        version=version,
+        counts=counts,
+        changed_buckets=changed,
+        offsets=offsets,
+        path="driver",
     )

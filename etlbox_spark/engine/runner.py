@@ -9,6 +9,8 @@ checkpoint lets a resume skip even the no-op job submission.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import SparkSession
 
 from .checkpoint import Checkpoint
@@ -46,13 +48,28 @@ def replay(
         if ep in done_fast:
             results.append(MergeResult(epoch_id=ep, version=-1, skipped=True))
             continue
-        events = spark.read.parquet(f"{events_dir}/epoch={ep}")
-        res = apply_epoch(spark, lake, events, spec, mode, ep, delta_dir=delta_dir)
+        res = apply_epoch(spark, lake, _epoch_input(spark, f"{events_dir}/epoch={ep}"),
+                          spec, mode, ep, delta_dir=delta_dir)
         if checkpoint is not None:
             checkpoint.record(res)
         results.append(res)
         _auto_compact(spark, lake)
     return results
+
+
+def _epoch_input(spark: SparkSession, epoch_dir: str):
+    """What ``apply_epoch`` gets for one landed epoch: the files Spark's
+    reader would read there (names not starting with ``_`` or ``.``), so
+    a small epoch can run on the driver — or the Spark read of the dir
+    when it is not a local directory (a filesystem URI, or missing: Spark
+    reports it) or holds a subdirectory (Spark would discover partitions
+    in it)."""
+    if os.path.isdir(epoch_dir):
+        paths = [os.path.join(epoch_dir, n) for n in sorted(os.listdir(epoch_dir))
+                 if not n.startswith(("_", "."))]
+        if all(os.path.isfile(p) for p in paths):
+            return paths
+    return spark.read.parquet(epoch_dir)
 
 
 def _auto_compact(spark: SparkSession, lake: LakeTable) -> None:

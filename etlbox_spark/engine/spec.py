@@ -73,11 +73,3 @@ class MergeSpec:
     op_col: str = "op"
     payload_cols: tuple[str, ...] = field(default=())
     on_malformed: str = "ignore"
-
-    def all_payload_cols(self) -> tuple[str, ...]:
-        """Columns carried into the table (compare + extra payload)."""
-        seen = list(self.compare_cols)
-        for c in self.payload_cols:
-            if c not in seen:
-                seen.append(c)
-        return tuple(seen)

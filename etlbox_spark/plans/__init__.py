@@ -32,7 +32,3 @@ def scan_read_schema(df: DataFrame) -> list[str]:
 
 def has_broadcast_join(df: DataFrame) -> bool:
     return "BroadcastHashJoin" in physical_plan(df) or "BroadcastNestedLoopJoin" in physical_plan(df)
-
-
-def codegen_stage_count(df: DataFrame) -> int:
-    return physical_plan(df).count("WholeStageCodegen")

@@ -62,6 +62,30 @@ def test_skipped_epochs_not_in_fast_resume_index(tmp_path):
     assert json.load(open(ck.path))["done_runs"] == [[0, 0], [2, 2]]
 
 
+def test_skipped_retry_keeps_the_applied_entry(tmp_path):
+    # a retry that finds the epoch committed records a skipped result
+    # with no counts; the applied entry keeps its counts, and the
+    # journal holds both lines for the "last applied record wins" fold
+    ck = Checkpoint(str(tmp_path / "c.json"))
+    ck.record(_res(3))
+    ck.record(MergeResult(epoch_id=3, version=9, skipped=True))
+    entry = ck.load()["epochs"]["3"]
+    assert entry["skipped"] is False and entry["counts"] == {"insert": 1}
+    assert entry["version"] == 4
+    assert ck.done_epochs() == {3}
+    assert [r["skipped"] for r in ck.lineage()] == [False, True]
+    # a skipped record of an epoch never applied here is still kept
+    ck.record(MergeResult(epoch_id=5, version=9, skipped=True))
+    assert ck.load()["epochs"]["5"]["skipped"] is True
+
+
+def test_journal_records_the_path_taken(tmp_path):
+    ck = Checkpoint(str(tmp_path / "c.json"))
+    ck.record(MergeResult(epoch_id=0, version=1, path="driver"))
+    ck.record(MergeResult(epoch_id=1, version=2, path="spark", fallback="rows"))
+    assert [(r["path"], r["fallback"]) for r in ck.lineage()] == [("driver", None), ("spark", "rows")]
+
+
 def test_state_without_done_runs_fails_fast(tmp_path):
     # a state file this module did not write must not be read as an
     # empty fast-resume index: load() names the file instead

@@ -96,6 +96,41 @@ def test_vacuum_reclaims_unreferenced_files(spark, tmp_path):
     assert stats2["files_deleted"] == 0 and stats2["manifests_deleted"] == 0
 
 
+def test_vacuum_keeps_the_checksum_sidecars_of_live_files(spark, tmp_path):
+    """Hadoop writes ``.<name>.crc`` beside every data file, and a
+    checksummed open of the file fails once it is gone. With every
+    version kept, vacuum frees nothing: every live file keeps its
+    sidecar and ``files_deleted`` is 0. After a compaction, the freed
+    files go with their sidecars, and only data files are counted."""
+    t = LakeTable.create(
+        str(tmp_path / "t"), REPO_FILES_SCHEMA, ["repo", "path"], 4,
+        properties={"write.mode": "mor"},
+    )
+    _apply_n_epochs(spark, t, n=3)
+
+    def sidecar(p):
+        return os.path.join(os.path.dirname(p), f".{os.path.basename(p)}.crc")
+
+    live = [os.path.join(t.root, e["path"]) for e in t.manifest().files]
+    assert live and all(os.path.exists(sidecar(p)) for p in live)
+    state = _state(spark, t)
+    stats = t.vacuum(keep_versions=10)
+    assert stats["files_deleted"] == 0 and stats["bytes_freed"] == 0
+    assert all(os.path.exists(sidecar(p)) for p in live)
+
+    t.compact(spark)
+    stats = t.vacuum(keep_versions=1)
+    freed = [p for p in live if not os.path.exists(p)]
+    assert freed and stats["files_deleted"] == len(freed)
+    assert not any(os.path.exists(sidecar(p)) for p in freed)
+    on_disk = {
+        os.path.join(d, fn) for d, _, files in os.walk(t._data_dir) for fn in files
+    }
+    assert {sidecar(os.path.join(t.root, e["path"])) for e in t.manifest().files} <= on_disk
+    assert _state(spark, t) == state
+    assert t.fsck()["ok"]
+
+
 def test_vacuum_survives_files_vanishing_mid_walk(spark, tmp_path):
     """A concurrent writer's cleanup can remove a data file between
     vacuum's walk listing and its stat — a crashed commit's RETRY

@@ -47,7 +47,13 @@ def test_collect_only_in_sanctioned_places():
     row per partition — O(corruption findings), never O(files).
     merge.py: _probe_dirs_distributed collects one (index, schema-json)
     string per change dir — planning metadata for the generation
-    grouping, a few hundred bytes per epoch, never data rows."""
+    grouping, a few hundred bytes per epoch, never data rows; and
+    _apply_epoch_driver brings one small epoch's projected event rows
+    back with toArrow() (Arrow batches, no per-row Python) from a local
+    relation it built on the driver from the same rows — bounded by the
+    driver gate at lookup.DRIVER_EPOCH_MAX_ROWS events (footer counts,
+    checked before the read), and the events plus the snapshot rows it
+    reads with pyarrow stay under lookup.DRIVER_MAX_ROWS."""
     allowed = {
         "merge.py", "similarity.py", "joins.py", "lake.py", "__init__.py",
         "textdedup.py", "fsck.py",

@@ -217,8 +217,9 @@ def test_multi_writer_soak(spark, tmp_path):
     assert {r["path"] for r in maint} == set(DEL_KEYS)
     assert all(r["action"] == "delete" and r["content"] == f"seed-{r['path']}" for r in maint)
 
-    # zero orphans: quiesce, fold, vacuum hard, then the on-disk data set
-    # must equal the kept manifests' referenced set
+    # zero orphans: quiesce, fold, vacuum hard, then the on-disk data
+    # files must equal the kept manifests' referenced set (each keeps its
+    # checksum sidecar, which is not a data file)
     t.compact(spark)
     time.sleep(0.05)
     t.vacuum(keep_versions=1, grace_s=0.0)
@@ -229,7 +230,8 @@ def test_multi_writer_soak(spark, tmp_path):
     on_disk = set()
     for dirpath, _dirs, files in os.walk(os.path.join(t.root, "data")):
         for fn in files:
-            on_disk.add(os.path.normpath(os.path.join(dirpath, fn)))
+            if fn.endswith(".parquet"):
+                on_disk.add(os.path.normpath(os.path.join(dirpath, fn)))
     assert on_disk == referenced, (
         f"orphans: {sorted(on_disk - referenced)[:3]} / "
         f"missing: {sorted(referenced - on_disk)[:3]}"
